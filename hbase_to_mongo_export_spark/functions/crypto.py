@@ -68,6 +68,9 @@ def make_decrypt_udf(key_service: KeyService = local_key_service):
     Returns null for any per-record failure (bad base64, wrong key size,
     key-service error) — the quarantine path, mirroring the reference's
     skip-on-DecryptionFailureException.
+
+    Nondeterministic because it calls the key service: the optimizer must
+    not copy it into a pushed-down filter.
     """
 
     @F.pandas_udf(T.StringType())
@@ -94,7 +97,7 @@ def make_decrypt_udf(key_service: KeyService = local_key_service):
                 dtype="object",
             )
 
-    return decrypt
+    return decrypt.asNondeterministic()
 
 
 def encrypt_bytes(key: bytes, iv: bytes, data: bytes) -> bytes:

@@ -372,3 +372,7 @@ def normalize_udf(
                 "error": [r.error for r in rows],
             }
         )
+
+
+# Pure, but nondeterministic keeps it out of pushed-down filters: one call per row.
+normalize_udf = normalize_udf.asNondeterministic()

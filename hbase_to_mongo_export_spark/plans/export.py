@@ -9,6 +9,10 @@ latest-per-key) DataFrame pipeline. The whole HTME dataflow has no
 join/agg, so at 100 TB it scales linearly with input splits; the only
 Python stages are the decrypt and normalize pandas UDFs (Arrow-batched),
 everything else is whole-stage-codegen column work.
+
+The prefix up to sanitise is one tagged frame (record columns plus
+``error``); records and quarantine are filters of it. ``run_export``
+persists it once, so each (nondeterministic) UDF runs once per row.
 """
 
 from __future__ import annotations
@@ -63,7 +67,72 @@ class ExportResult:
     quarantined: int
     files: list[str]
     manifest_files: list[str]
-    metrics: dict = field(default_factory=dict)  # in-flight observe() counters
+    metrics: dict = field(default_factory=dict)  # the sink's row/byte counters
+
+
+def _tagged(source: DataFrame, cfg: ExportConfig) -> DataFrame:
+    """The envelope → sanitise prefix as one frame: the ``records`` columns
+    plus ``error`` (null for a good row)."""
+    env.check_blocked_topic(cfg.topic, cfg.blocked_topics)
+
+    df = env.latest_per_key(
+        source,
+        ts_start=cfg.ts_start,
+        ts_end=cfg.ts_end,
+        assume_unique_keys=cfg.assume_unique_keys,
+    )
+    df = env.parse_envelope(df, topic=cfg.topic).withColumnRenamed("ts", "manifest_ts")
+    good, missing = env.split_mandatory(df)
+
+    payload = F.col("db_object")
+    if not cfg.plaintext_payloads:
+        decrypt = crypto.make_decrypt_udf(cfg.key_service)
+        payload = decrypt(payload, F.col("encrypted_key"), F.col("kek_id"), F.col("iv"))
+
+    # rowkey id = UTF-8 of the key minus its 4-byte spreading checksum
+    # (Validator.kt:32-33). A failed decrypt (null payload) comes back as
+    # norm.error "no decrypted payload".
+    rowkey_id = F.decode(F.expr("substring(key, 5, length(key) - 4)"), "UTF-8")
+    good = good.withColumn(
+        "norm",
+        normalize_udf(
+            payload, rowkey_id, F.col("db"), F.col("collection"), F.col("last_modified")
+        ),
+    )
+
+    record = sanitise.sanitise(
+        F.col("norm.record_json"), F.col("db"), F.col("collection")
+    )
+    record = sanitise.apply_topic_transform(record, F.col("inner_type"), cfg.topic)
+
+    good = good.select(
+        record.alias("record"),
+        F.col("norm.manifest_id").alias("manifest_id"),
+        "manifest_ts",
+        "db",
+        "collection",
+        F.lit("EXPORT").alias("manifest_source"),
+        "outer_type",
+        "inner_type",
+        F.col("norm.manifest_original_id").alias("manifest_original_id"),
+        "key",
+        F.col("norm.error").alias("error"),
+    )
+    reason = F.lit("missing mandatory field").alias("error")
+    missing = missing.select("key", "manifest_ts", "db", "collection", reason)
+    return good.unionByName(missing, allowMissingColumns=True)
+
+
+def _split(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(records, quarantine) as filters of the tagged frame; a row with
+    neither record nor error is the reference's silent drop (gson null)."""
+    records = tagged.filter(
+        F.col("error").isNull() & F.col("record").isNotNull()
+    ).drop("error")
+    quarantine = tagged.filter(F.col("error").isNotNull()).select(
+        "key", F.col("manifest_ts").alias("ts"), "db", "collection", "error"
+    )
+    return records, quarantine
 
 
 def build_export(
@@ -73,84 +142,10 @@ def build_export(
 
     ``records`` columns: record (final output line, string), manifest_id,
     manifest_ts, db, collection, manifest_source, outer_type, inner_type,
-    manifest_original_id, key.
+    manifest_original_id, key. Each output is its own plan over the source;
+    ``run_export`` materializes their shared prefix once instead.
     """
-    env.check_blocked_topic(cfg.topic, cfg.blocked_topics)
-
-    df = env.latest_per_key(
-        source,
-        ts_start=cfg.ts_start,
-        ts_end=cfg.ts_end,
-        assume_unique_keys=cfg.assume_unique_keys,
-    )
-    df = env.parse_envelope(df, topic=cfg.topic)
-    good, quarantine_env = env.split_mandatory(df)
-
-    if cfg.plaintext_payloads:
-        good = good.withColumn("decrypted", F.col("db_object"))
-    else:
-        decrypt = crypto.make_decrypt_udf(cfg.key_service)
-        good = good.withColumn(
-            "decrypted",
-            decrypt(
-                F.col("db_object"), F.col("encrypted_key"), F.col("kek_id"), F.col("iv")
-            ),
-        )
-
-    # rowkey id = UTF-8 of the key minus its 4-byte spreading checksum
-    # (Validator.kt:32-33).
-    rowkey_id = F.decode(F.expr("substring(key, 5, length(key) - 4)"), "UTF-8")
-    good = good.withColumn(
-        "norm",
-        normalize_udf(
-            F.col("decrypted"),
-            rowkey_id,
-            F.col("db"),
-            F.col("collection"),
-            F.col("last_modified"),
-        ),
-    )
-
-    # Quarantine: decrypt failure (null decrypted) or normalization error.
-    # norm.record_json null with null error = the reference's silent drop
-    # (gson "null" payload) — excluded from both outputs.
-    bad = good.filter(
-        F.col("decrypted").isNull() | F.col("norm.error").isNotNull()
-    ).select(
-        "key",
-        "ts",
-        "db",
-        "collection",
-        F.coalesce(F.col("norm.error"), F.lit("decryption failure")).alias("error"),
-    )
-    quarantine = quarantine_env.select(
-        "key", "ts", "db", "collection", F.lit("missing mandatory field").alias("error")
-    ).unionByName(bad)
-
-    ok = good.filter(
-        F.col("decrypted").isNotNull()
-        & F.col("norm.error").isNull()
-        & F.col("norm.record_json").isNotNull()
-    )
-
-    record = sanitise.sanitise(
-        F.col("norm.record_json"), F.col("db"), F.col("collection")
-    )
-    record = sanitise.apply_topic_transform(record, F.col("inner_type"), cfg.topic)
-
-    records = ok.select(
-        record.alias("record"),
-        F.col("norm.manifest_id").alias("manifest_id"),
-        F.col("ts").alias("manifest_ts"),
-        "db",
-        "collection",
-        F.lit("EXPORT").alias("manifest_source"),
-        "outer_type",
-        "inner_type",
-        F.col("norm.manifest_original_id").alias("manifest_original_id"),
-        "key",
-    )
-    return records, quarantine
+    return _split(_tagged(source, cfg))
 
 
 def run_export(
@@ -186,7 +181,7 @@ def run_export(
         # lets a missing table surface here and fold to Table_Unavailable)
         if callable(source):
             source = source()
-        records, quarantine = build_export(source, cfg)
+        tagged = _tagged(source, cfg)
     except env.BlockedTopicError:
         set_status("Blocked_Topic")
         return ExportResult(cfg.topic, "Blocked_Topic", 0, 0, [], [])
@@ -196,22 +191,8 @@ def run_export(
 
     set_status("Exporting")
     try:
-        # In-flight counters via observe(): the reference keeps running
-        # record/byte counters during the scan (A1, HBaseReader counters);
-        # Spark's observation metrics ride the write action itself — no
-        # second pass over the data. Observation only completes for
-        # DataFrame actions, so the strict sink (which drives an RDD
-        # mapPartitions) reports its own counters instead.
-        obs = None
-        if not cfg.strict_sink:
-            from pyspark.sql import Observation
-
-            obs = Observation("export_metrics")
-            records = records.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows_exported"),
-                F.sum(F.length("record")).alias("uncompressed_bytes"),
-            )
+        # The export's one materialization: every job below reads it.
+        records, quarantine = _split(tagged.persist())
         written = sink.write_snapshot(records, cfg)
         n_quarantined = quarantine.count()
         if status_store is not None:
@@ -234,7 +215,7 @@ def run_export(
             n_quarantined,
             written.files,
             written.manifest_files,
-            metrics=dict(obs.get) if obs is not None else {
+            metrics={
                 "rows_exported": written.records,
                 "uncompressed_bytes": written.uncompressed_bytes,
             },
@@ -255,3 +236,5 @@ def run_export(
         if metrics is not None:
             metrics.inc("export_failures")
         return ExportResult(cfg.topic, status, 0, 0, [], [])
+    finally:
+        tagged.unpersist()

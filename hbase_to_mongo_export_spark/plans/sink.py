@@ -6,7 +6,8 @@ Two modes:
   compression codec for the snapshot, and a pipe-delimited CSV dataset for
   the manifest. Catalyst/Tungsten handle parallelism; file size is governed
   by partition size (`spark.sql.files.maxRecordsPerFile` if needed). Two
-  jobs over a persisted plan.
+  jobs, snapshot then manifest; the snapshot job carries the in-flight
+  observe() counters. The caller owns materializing the plan.
 
 - **strict** (fidelity mode): reproduces the reference's byte-capped,
   %06d-numbered, optionally AES-CTR-encrypted batch files plus per-batch
@@ -50,7 +51,7 @@ import os
 from dataclasses import dataclass
 from typing import Iterable, Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions import crypto
@@ -99,7 +100,7 @@ class WrittenOutput:
     records: int
     files: list[str]
     manifest_files: list[str]
-    uncompressed_bytes: int = 0  # record bytes excl. newlines (strict sink)
+    uncompressed_bytes: int  # record bytes excl. newlines
 
 
 def write_snapshot(records: DataFrame, cfg: ExportConfig) -> WrittenOutput:
@@ -109,26 +110,28 @@ def write_snapshot(records: DataFrame, cfg: ExportConfig) -> WrittenOutput:
 
 
 def _write_native(records: DataFrame, cfg: ExportConfig) -> WrittenOutput:
-    """Spark-native two-output write; records plan persisted so the UDF
-    pipeline runs once."""
+    """Spark-native two-output write; the counters ride the snapshot write
+    (the reference's running A1 counters)."""
     manifest_dir = cfg.manifest_dir or os.path.join(cfg.output_dir, "_manifest")
-    records = records.persist()
-    try:
-        (
-            records.select("record")
-            .write.mode("overwrite")
-            .option("compression", cfg.compression)
-            .text(cfg.output_dir)
+    obs = Observation("export_metrics")
+    (
+        records.observe(
+            obs,
+            F.count(F.lit(1)).alias("records"),
+            F.coalesce(F.sum(F.length("record")), F.lit(0)).alias("uncompressed_bytes"),
         )
-        (
-            records.select(manifest_line_col().alias("value"))
-            .write.mode("overwrite")
-            .text(manifest_dir)
-        )
-        n = records.count()
-    finally:
-        records.unpersist()
-    return WrittenOutput(n, _list_parts(cfg.output_dir), _list_parts(manifest_dir))
+        .select("record")
+        .write.mode("overwrite")
+        .option("compression", cfg.compression)
+        .text(cfg.output_dir)
+    )
+    (
+        records.select(manifest_line_col().alias("value"))
+        .write.mode("overwrite")
+        .text(manifest_dir)
+    )
+    files, manifests = _list_parts(cfg.output_dir), _list_parts(manifest_dir)
+    return WrittenOutput(files=files, manifest_files=manifests, **obs.get)
 
 
 def _list_parts(path: str) -> list[str]:

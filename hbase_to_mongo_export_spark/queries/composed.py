@@ -1,6 +1,6 @@
 """Composed-oracle queries: these interpolate the oracle SQL of earlier
 registrations (reading _ORACLES at import time), so they live in the one
-module imported last. Mechanically split by tools/split_queries.py."""
+module imported last."""
 
 from ._core import *  # noqa: F401,F403
 

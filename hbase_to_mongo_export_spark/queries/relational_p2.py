@@ -1,5 +1,5 @@
-"""relational_p2 queries (mechanically split from the original queries.py monolith
-by tools/split_queries.py; bodies verbatim, shared registry in _core)."""
+"""relational_p2 queries (mechanically split from the original queries.py monolith;
+bodies verbatim, shared registry in _core)."""
 
 from ._core import *  # noqa: F401,F403
 from .graph import _so_pairs

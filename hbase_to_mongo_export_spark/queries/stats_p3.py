@@ -1,5 +1,5 @@
-"""stats_p3 queries (mechanically split from the original queries.py monolith
-by tools/split_queries.py; bodies verbatim, shared registry in _core)."""
+"""stats_p3 queries (mechanically split from the original queries.py monolith;
+bodies verbatim, shared registry in _core)."""
 
 from ._core import *  # noqa: F401,F403
 

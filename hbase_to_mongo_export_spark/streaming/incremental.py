@@ -15,6 +15,7 @@ a long-running cluster).
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import tempfile
 import uuid
@@ -82,29 +83,33 @@ def incremental_export(
     checkpoint_dir: str,
 ) -> None:
     """Continuous variant of the export pipeline: stream the HBase-shaped
-    source and run the full parse→decrypt→normalize→sanitise pipeline per
-    micro-batch via foreachBatch (checkpointed, exactly-once to files).
+    source and ``run_export`` each micro-batch N into ``batch=N`` under the
+    output and manifest dirs via foreachBatch (checkpointed, exactly-once
+    to files). A batch that does not end ``Exported`` fails the stream, so
+    the checkpoint never advances past it.
 
     ``cfg`` is a plans.export.ExportConfig; latest-per-key dedup applies
     within each micro-batch (cross-batch versions resolve by downstream
     latest-wins readers, matching the reference's repeated-incremental
     semantics)."""
-    from ..plans.export import build_export
-    from ..plans import sink as sink_mod
+    from ..plans.export import run_export
     from ..sources.fixtures import SOURCE_SCHEMA
 
     stream = spark.readStream.schema(SOURCE_SCHEMA).parquet(source_dir)
+    manifest_root = cfg.manifest_dir or os.path.join(cfg.output_dir, "_manifest")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        records, _ = build_export(batch_df, cfg)
-        out_dir = os.path.join(cfg.output_dir, f"batch={batch_id}")
-        records.select("record").write.mode("overwrite").text(out_dir)
-        manifest_dir = os.path.join(
-            cfg.manifest_dir or cfg.output_dir + "/_manifest", f"batch={batch_id}"
+        part = f"batch={batch_id}"
+        batch_cfg = dataclasses.replace(
+            cfg,
+            output_dir=os.path.join(cfg.output_dir, part),
+            manifest_dir=os.path.join(manifest_root, part),
         )
-        records.select(
-            sink_mod.manifest_line_col().alias("value")
-        ).write.mode("overwrite").text(manifest_dir)
+        result = run_export(spark, batch_df, batch_cfg)
+        if result.status != "Exported":
+            raise RuntimeError(
+                f"micro-batch {batch_id} of {cfg.topic} ended {result.status}"
+            )
 
     q = (
         stream.writeStream.foreachBatch(process_batch)

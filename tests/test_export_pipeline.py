@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from hbase_to_mongo_export_spark.functions import crypto
 from hbase_to_mongo_export_spark.plans.export import ExportConfig, build_export, run_export
 from hbase_to_mongo_export_spark.sources import envelope as env
 from hbase_to_mongo_export_spark.sources import fixtures
@@ -93,7 +94,8 @@ class TestBuild:
         )
         records, quarantine = build_export(df, cfg(tmp_path))
         assert records.count() == 0
-        assert quarantine.count() == 1
+        q = quarantine.collect()
+        assert len(q) == 1 and q[0].error == "no decrypted payload"
 
     def test_latest_per_key_dedup(self, spark, tmp_path):
         k1, _, v1 = fixtures.envelope_row(0)
@@ -122,6 +124,38 @@ class TestBuild:
         df = fixtures.source_records(spark, n=4, plaintext=True)
         records, _ = build_export(df, cfg(tmp_path, plaintext_payloads=True))
         assert records.count() == 4
+
+
+class TestSinglePass:
+    """Decrypt calls the key service, so each Python UDF must run once per
+    row: no copy in a pushed-down filter, one materialization per export."""
+
+    @pytest.mark.parametrize(
+        "plaintext, udfs",
+        [(False, ("decrypt", "normalize_udf")), (True, ("normalize_udf",))],
+    )
+    def test_one_python_eval_per_udf(self, source, tmp_path, plaintext, udfs):
+        for df in build_export(source, cfg(tmp_path, plaintext_payloads=plaintext)):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+            assert len(evals) == len(udfs), plan
+            for udf in udfs:
+                assert sum(f"ArrowEvalPython [{udf}(" in ln for ln in evals) == 1, plan
+
+    def test_one_key_service_call_per_key_per_task(self, spark, source, tmp_path):
+        calls = spark.sparkContext.accumulator(0)
+
+        def counting_key_service(kek_id, encrypted_key):
+            calls.add(1)
+            return crypto.local_key_service(kek_id, encrypted_key)
+
+        result = run_export(
+            spark, source, cfg(tmp_path, key_service=counting_key_service)
+        )
+        assert result.status == "Exported" and result.records == N
+        # every fixture record carries the same (kek, key), and each source
+        # partition is one decrypt task
+        assert calls.value == source.rdd.getNumPartitions()
 
 
 class TestSinks:

@@ -3,8 +3,11 @@ answer; incremental export drains the source exactly once and resumes
 from its checkpoint."""
 
 import glob
+import gzip
 import json
 import os
+
+import pytest
 
 from hbase_to_mongo_export_spark.plans.export import ExportConfig
 from hbase_to_mongo_export_spark.sources import fixtures
@@ -49,8 +52,8 @@ def test_incremental_export_with_checkpoint_resume(spark, tmp_path):
     )
     incremental_export(spark, src_dir, cfg, ckpt)
     lines1 = []
-    for f in glob.glob(os.path.join(out_dir, "batch=*", "part-*")):
-        with open(f, encoding="utf-8") as fh:
+    for f in glob.glob(os.path.join(out_dir, "batch=*", "part-*.gz")):
+        with gzip.open(f, "rt", encoding="utf-8") as fh:
             lines1 += fh.read().splitlines()
     assert len(lines1) == 20
     for ln in lines1:
@@ -62,10 +65,30 @@ def test_incremental_export_with_checkpoint_resume(spark, tmp_path):
     ).parquet(src_dir)
     incremental_export(spark, src_dir, cfg, ckpt)
     lines2 = []
-    for f in glob.glob(os.path.join(out_dir, "batch=*", "part-*")):
-        with open(f, encoding="utf-8") as fh:
+    for f in glob.glob(os.path.join(out_dir, "batch=*", "part-*.gz")):
+        with gzip.open(f, "rt", encoding="utf-8") as fh:
             lines2 += fh.read().splitlines()
     assert len(lines2) == 30  # 20 from batch 0 + 10 new, no reprocessing dupes
+
+
+def test_incremental_export_blocked_topic_fails_stream(spark, tmp_path):
+    """A micro-batch that does not end Exported fails the stream, so the
+    checkpoint cannot advance past it; a blocked topic writes nothing."""
+    src_dir = str(tmp_path / "src")
+    out_dir = str(tmp_path / "out")
+    fixtures.source_records(spark, n=5).write.parquet(src_dir)
+    cfg = ExportConfig(
+        topic="db.blocked.topic",
+        output_dir=out_dir,
+        manifest_dir=str(tmp_path / "manifest"),
+        blocked_topics="db.blocked.topic",
+    )
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(Exception, match="Blocked_Topic"):
+        incremental_export(spark, src_dir, cfg, ckpt)
+    assert not os.path.exists(os.path.join(ckpt, "commits", "0"))
+    assert not glob.glob(os.path.join(out_dir, "batch=*"))
+    assert not glob.glob(os.path.join(str(tmp_path / "manifest"), "batch=*"))
 
 
 def test_stateful_running_user_stats_equals_batch(spark, sf_dir, tables):
