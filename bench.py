@@ -22,6 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hbase_to_mongo_export_spark import queries as registry  # noqa: E402
+from hbase_to_mongo_export_spark.operators import _cache as op_cache  # noqa: E402
 from hbase_to_mongo_export_spark.session import get_spark  # noqa: E402
 
 # Headline set: the scale-sensitive queries (scans, joins, aggs, windows,
@@ -102,6 +103,33 @@ BENCH_QUERIES = [
 ]
 
 
+def run(df) -> None:
+    """Execute ``df`` fully into the noop sink: no count-style column
+    pruning, no driver-side row serialization."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def cold_samples(build, runs: int = 3) -> list[float]:
+    """Wall seconds of ``runs`` cold executions of ``build()``, in run
+    order, after one untimed warm-up (the first execution of a plan shape
+    pays JVM code generation that a long-running session amortizes away).
+
+    Operator caches built by one run are released before the next, so
+    every timed run pays its query's full computation: a ``.cache()``
+    built in the warm-up (Spark's CacheManager matches by canonicalized
+    plan) would otherwise serve all timed runs and overstate any
+    cache-introducing optimization."""
+    run(build())
+    op_cache.release_all()
+    samples = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        run(build())
+        samples.append(time.perf_counter() - t0)
+        op_cache.release_all()
+    return samples
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -118,39 +146,15 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     qmap = registry.queries()
-    def run(df) -> None:
-        # noop sink: fully executes the plan (no count-style column pruning)
-        # without paying driver-side row serialization.
-        df.write.format("noop").mode("overwrite").save()
-
     spreads: dict[str, list[float]] = {}
 
-    from hbase_to_mongo_export_spark.operators import _cache as op_cache
     from hbase_to_mongo_export_spark.sources import catalog as _catalog
 
     def timed(build, name: str) -> float:
-        # median of 3 timed runs after one warm-up: the r4 audit saw a
-        # uniform ~11% drift on unchanged queries that a single sample
-        # cannot distinguish from regression; the min/max spread is
-        # reported alongside so a reviewer can see the noise floor.
-        #
-        # Cold-run contract (r10 verdict ask #2): op-caches built during
-        # one run are released BEFORE the next, so every timed run pays
-        # its query's full computation — a .cache() built in the warm-up
-        # (Spark's CacheManager matches by canonicalized plan) would
-        # otherwise serve all three timed runs and overstate any
-        # cache-introducing optimization. The measurement-methodology
-        # change lands alongside a documented same-code before/after in
-        # OPTIMIZATION_r11.md.
-        run(build())
-        op_cache.release_all()
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run(build())
-            samples.append(time.perf_counter() - t0)
-            op_cache.release_all()
-        samples.sort()
+        # median of 3 cold runs: a single sample cannot tell a uniform
+        # ~11% drift on unchanged queries from a regression; the min/max
+        # spread is reported alongside as the noise floor.
+        samples = sorted(cold_samples(build))
         spreads[name] = [round(samples[0], 3), round(samples[-1], 3)]
         return round(samples[1], 3)
 

@@ -138,6 +138,158 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def _table(spark, args) -> int:
+    """The ``table`` subcommand: one action on a ParquetMergeTable."""
+    from pyspark.sql import functions as F
+
+    from .operators.merge import ParquetMergeTable
+
+    t = ParquetMergeTable(spark, args.path)
+    if args.action == "create":
+        if not args.source:
+            print("create requires --source", file=sys.stderr)
+            return 2
+        v = t.create(spark.read.parquet(args.source))
+        print(json.dumps({"version": v, "path": args.path}))
+    elif args.action == "append":
+        if not args.source:
+            print("append requires --source", file=sys.stderr)
+            return 2
+        print(json.dumps(t.append(spark.read.parquet(args.source))))
+    elif args.action == "read":
+        where = None
+        if args.range:
+            where = []
+            for spec in args.range:
+                parts = spec.split(",", 2)
+                if len(parts) != 3:
+                    print(
+                        "--range needs COL,OP,VALUE (e.g. key,>=,800)",
+                        file=sys.stderr,
+                    )
+                    return 2
+                col, op, raw = parts
+                try:
+                    val = int(raw)
+                except ValueError:
+                    try:
+                        val = float(raw)
+                    except ValueError:
+                        print(
+                            f"--range value {raw!r} must be numeric",
+                            file=sys.stderr,
+                        )
+                        return 2
+                where.append((col, op, val))
+        df = t.read(
+            version=args.version,
+            where=where,
+            as_of_timestamp=args.as_of_timestamp,
+        )
+        for r in df.limit(args.limit).collect():
+            print(json.dumps(r.asDict(), default=str))
+    elif args.action == "detail":
+        print(json.dumps(t.detail(version=args.version)))
+    elif args.action == "history":
+        for man in t.history():
+            print(
+                json.dumps(
+                    {
+                        "version": man["version"],
+                        "operation": man["operation"],
+                        "files": len(man["files"]),
+                        "delete_files": len(man.get("delete_files", [])),
+                        "stats": man.get("stats", {}),
+                    }
+                )
+            )
+    elif args.action == "changes":
+        df = t.read_changes(args.from_version, args.to_version)
+        for r in df.limit(args.limit).collect():
+            print(json.dumps(r.asDict(), default=str))
+    elif args.action == "delete-where":
+        if not args.where:
+            print("delete-where requires --where", file=sys.stderr)
+            return 2
+        print(json.dumps(t.delete_where(F.expr(args.where))))
+    elif args.action == "compact":
+        zorder = None
+        if args.zorder:
+            cols = [c.strip() for c in args.zorder.split(",") if c.strip()]
+            if len(cols) < 2:
+                print(
+                    "--zorder needs at least two comma-separated columns",
+                    file=sys.stderr,
+                )
+                return 2
+            zorder = tuple(cols)
+        print(
+            json.dumps(
+                t.compact(
+                    sort_col=args.sort_col,
+                    target_files=args.target_files,
+                    zorder=zorder,
+                    bin_pack_bytes=args.bin_pack_bytes,
+                    purge_vectors_over=args.purge_vectors_over,
+                )
+            )
+        )
+    elif args.action == "add-constraint":
+        if not args.name or not args.expr:
+            print("add-constraint requires --name and --expr", file=sys.stderr)
+            return 2
+        print(json.dumps(t.add_constraint(args.name, args.expr)))
+    elif args.action == "drop-constraint":
+        if not args.name:
+            print("drop-constraint requires --name", file=sys.stderr)
+            return 2
+        print(json.dumps(t.drop_constraint(args.name)))
+    elif args.action == "update-where":
+        if not args.where or not args.set:
+            print("update-where requires --where and --set", file=sys.stderr)
+            return 2
+        set_map = {}
+        for a in args.set:
+            col, eq, expr = a.partition("=")
+            if not eq or not col.strip():
+                print(f"bad --set (want COL=EXPR): {a!r}", file=sys.stderr)
+                return 2
+            set_map[col.strip()] = F.expr(expr)
+        print(json.dumps(t.update_where(F.expr(args.where), set_map)))
+    elif args.action == "clone":
+        if not args.dest:
+            print("clone requires --dest", file=sys.stderr)
+            return 2
+        c = t.clone(args.dest, version=args.version)
+        print(json.dumps(c._manifest(0)["stats"]))
+    elif args.action == "rename-column":
+        if not args.column or not args.to:
+            print("rename-column requires --column and --to", file=sys.stderr)
+            return 2
+        print(json.dumps(t.rename_column(args.column, args.to)))
+    elif args.action == "drop-column":
+        if not args.column:
+            print("drop-column requires --column", file=sys.stderr)
+            return 2
+        print(json.dumps(t.drop_column(args.column)))
+    elif args.action == "restore":
+        if args.version is None:
+            print("restore requires --version", file=sys.stderr)
+            return 2
+        print(json.dumps(t.restore(args.version)))
+    elif args.action == "vacuum":
+        print(
+            json.dumps(
+                t.vacuum(
+                    retain_last=args.retain_last,
+                    sweep_orphans=args.sweep_orphans,
+                    orphan_grace_seconds=args.orphan_grace_seconds,
+                )
+            )
+        )
+    return 0
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
     from .session import get_spark
@@ -205,7 +357,11 @@ def main(argv: list[str] | None = None) -> int:
                 }
             )
         )
-        return 0 if result.status in ("Exported",) else 1
+        if result.status != "Exported":
+            if result.error:
+                print(result.error, file=sys.stderr)
+            return 1
+        return 0
 
     if args.cmd == "sql":
         from .sources.catalog import register_views, write_any
@@ -242,193 +398,13 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "table":
-        from pyspark.sql import functions as F
+        from .operators.merge import MergeError
 
-        from .operators.merge import ParquetMergeTable
-
-        t = ParquetMergeTable(spark, args.path)
-        if args.action == "create":
-            if not args.source:
-                print("create requires --source", file=sys.stderr)
-                return 2
-            v = t.create(spark.read.parquet(args.source))
-            print(json.dumps({"version": v, "path": args.path}))
-        elif args.action == "append":
-            from .operators.merge import MergeError
-
-            if not args.source:
-                print("append requires --source", file=sys.stderr)
-                return 2
-            try:
-                print(json.dumps(t.append(spark.read.parquet(args.source))))
-            except MergeError as e:
-                print(str(e), file=sys.stderr)
-                return 1
-        elif args.action == "read":
-            where = None
-            if args.range:
-                where = []
-                for spec in args.range:
-                    parts = spec.split(",", 2)
-                    if len(parts) != 3:
-                        print(
-                            "--range needs COL,OP,VALUE (e.g. key,>=,800)",
-                            file=sys.stderr,
-                        )
-                        return 2
-                    col, op, raw = parts
-                    try:
-                        val = int(raw)
-                    except ValueError:
-                        try:
-                            val = float(raw)
-                        except ValueError:
-                            print(
-                                f"--range value {raw!r} must be numeric",
-                                file=sys.stderr,
-                            )
-                            return 2
-                    where.append((col, op, val))
-            df = t.read(
-                version=args.version,
-                where=where,
-                as_of_timestamp=args.as_of_timestamp,
-            )
-            for r in df.limit(args.limit).collect():
-                print(json.dumps(r.asDict(), default=str))
-        elif args.action == "detail":
-            print(json.dumps(t.detail(version=args.version)))
-        elif args.action == "history":
-            for man in t.history():
-                print(
-                    json.dumps(
-                        {
-                            "version": man["version"],
-                            "operation": man["operation"],
-                            "files": len(man["files"]),
-                            "delete_files": len(man.get("delete_files", [])),
-                            "stats": man.get("stats", {}),
-                        }
-                    )
-                )
-        elif args.action == "changes":
-            df = t.read_changes(args.from_version, args.to_version)
-            for r in df.limit(args.limit).collect():
-                print(json.dumps(r.asDict(), default=str))
-        elif args.action == "delete-where":
-            if not args.where:
-                print("delete-where requires --where", file=sys.stderr)
-                return 2
-            print(json.dumps(t.delete_where(F.expr(args.where))))
-        elif args.action == "compact":
-            zorder = None
-            if args.zorder:
-                cols = [c.strip() for c in args.zorder.split(",") if c.strip()]
-                if len(cols) < 2:
-                    print(
-                        "--zorder needs at least two comma-separated columns",
-                        file=sys.stderr,
-                    )
-                    return 2
-                zorder = tuple(cols)
-            print(
-                json.dumps(
-                    t.compact(
-                        sort_col=args.sort_col,
-                        target_files=args.target_files,
-                        zorder=zorder,
-                        bin_pack_bytes=args.bin_pack_bytes,
-                        purge_vectors_over=args.purge_vectors_over,
-                    )
-                )
-            )
-        elif args.action == "add-constraint":
-            from .operators.merge import MergeError
-
-            if not args.name or not args.expr:
-                print("add-constraint requires --name and --expr",
-                      file=sys.stderr)
-                return 2
-            try:
-                print(json.dumps(t.add_constraint(args.name, args.expr)))
-            except MergeError as e:
-                print(str(e), file=sys.stderr)
-                return 1
-        elif args.action == "drop-constraint":
-            from .operators.merge import MergeError
-
-            if not args.name:
-                print("drop-constraint requires --name", file=sys.stderr)
-                return 2
-            try:
-                print(json.dumps(t.drop_constraint(args.name)))
-            except MergeError as e:
-                print(str(e), file=sys.stderr)
-                return 1
-        elif args.action == "update-where":
-            if not args.where or not args.set:
-                print("update-where requires --where and --set",
-                      file=sys.stderr)
-                return 2
-            set_map = {}
-            for a in args.set:
-                col, eq, expr = a.partition("=")
-                if not eq or not col.strip():
-                    print(f"bad --set (want COL=EXPR): {a!r}", file=sys.stderr)
-                    return 2
-                set_map[col.strip()] = F.expr(expr)
-            print(json.dumps(t.update_where(F.expr(args.where), set_map)))
-        elif args.action == "clone":
-            if not args.dest:
-                print("clone requires --dest", file=sys.stderr)
-                return 2
-            c = t.clone(args.dest, version=args.version)
-            print(json.dumps(c._manifest(0)["stats"]))
-        elif args.action == "rename-column":
-            from .operators.merge import MergeError
-
-            if not args.column or not args.to:
-                print("rename-column requires --column and --to",
-                      file=sys.stderr)
-                return 2
-            try:
-                print(json.dumps(t.rename_column(args.column, args.to)))
-            except MergeError as e:
-                print(str(e), file=sys.stderr)
-                return 1
-        elif args.action == "drop-column":
-            from .operators.merge import MergeError
-
-            if not args.column:
-                print("drop-column requires --column", file=sys.stderr)
-                return 2
-            try:
-                print(json.dumps(t.drop_column(args.column)))
-            except MergeError as e:
-                print(str(e), file=sys.stderr)
-                return 1
-        elif args.action == "restore":
-            from .operators.merge import MergeError
-
-            if args.version is None:
-                print("restore requires --version", file=sys.stderr)
-                return 2
-            try:
-                print(json.dumps(t.restore(args.version)))
-            except MergeError as e:
-                print(str(e), file=sys.stderr)
-                return 1
-        elif args.action == "vacuum":
-            print(
-                json.dumps(
-                    t.vacuum(
-                        retain_last=args.retain_last,
-                        sweep_orphans=args.sweep_orphans,
-                        orphan_grace_seconds=args.orphan_grace_seconds,
-                    )
-                )
-            )
-        return 0
+        try:
+            return _table(spark, args)
+        except MergeError as e:
+            print(str(e), file=sys.stderr)
+            return 1
 
     if args.cmd == "completion-status":
         from .plans.status import LocalStatusStore, completion_status

@@ -7,7 +7,7 @@ are pinned against each other:
 
 - token_count        — whitespace tokenization
 - bpe_token_estimate — BPE-ish regex token count (words + punctuation)
-- punct_ratio / upper_ratio / digit_ratio / mean_word_len — quality signals
+- punct_ratio / digit_ratio / mean_word_len — quality signals
 - stopword_ratio     — per-language stopword hit ratio
 - quality_score      — composite [0,1] heuristic
 - lang_id            — n-gram/stopword-count heuristic language guess
@@ -62,12 +62,6 @@ def punct_ratio(text: Column) -> Column:
 def digit_ratio(text: Column) -> Column:
     return F.when(F.length(text) == 0, F.lit(0.0)).otherwise(
         F.length(F.regexp_replace(text, r"[^0-9]", "")) / F.length(text)
-    )
-
-
-def upper_ratio(text: Column) -> Column:
-    return F.when(F.length(text) == 0, F.lit(0.0)).otherwise(
-        F.length(F.regexp_replace(text, r"[^A-Z]", "")) / F.length(text)
     )
 
 

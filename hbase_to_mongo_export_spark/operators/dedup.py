@@ -239,22 +239,6 @@ def _to_signed(x: int) -> int:
     return x - 2**64 if x >= 2**63 else x
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """Array of ``num_hashes`` MinHash values.
-
-    Each shingle is hashed ONCE (xxhash64, JVM-side); the hash family is
-    ``h_i(s) = a_i * h(s) + b_i`` with 64-bit wrap — one string hash per
-    shingle plus cheap multiply-adds, ~10× cheaper than salted re-hashing.
-    Empty shingle sets get Long.MaxValue sentinels (no false merges).
-
-    NOTE: pass a column holding ALREADY-MATERIALIZED xxhash64 values via
-    ``prehashed=True`` when composing into a plan — referencing a transform
-    expression 64 times would re-run the string hashing per min."""
-    return minhash_from_hashes(
-        F.transform(shingles, lambda s: F.xxhash64(s)), num_hashes
-    )
-
-
 def minhash_from_hashes(hashes: Column, num_hashes: int = 64) -> Column:
     sentinel = F.lit(2**63 - 1).cast("long")
     mins = [

@@ -78,6 +78,15 @@ join over touched files; untouched data is never scanned past the
 pruning pass. The pruning scan itself reads ONLY the key columns
 (parquet column pruning — pinned by tests/test_plan_shapes.py).
 
+One copy-on-write path: every row-level writer scans through ``_scan``
+(the manifest's deletion vectors applied), finds its files with
+``_prune``/``_touched``, carries vectors with ``_carry_delete_files``
+and commits through ``_commit_rewrite``, which validates CHECK
+constraints on the staged files only. The layout rewrites (bin-packing,
+vector purge) commit through ``_repack`` instead, with no constraint
+check: they restage rows that were valid when first written, and a
+check would cost one job per constraint.
+
 Why no hive-style partition columns: the pruning story here is
 STATS-BASED (per-file min/max + sort/Z-order clustering), which is the
 direction the table formats themselves moved — Delta's liquid
@@ -717,6 +726,11 @@ def _dec_bound(v):
             return _dt.datetime.fromisoformat(v["v"])
         return None
     return v
+
+
+def _parquet_parts(d: str) -> list[str]:
+    """The parquet part files Spark wrote into directory ``d``."""
+    return [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
 
 
 @lru_cache(maxsize=65536)
@@ -1457,11 +1471,29 @@ class ParquetMergeTable:
         if max_records_per_file:
             w = w.option("maxRecordsPerFile", max_records_per_file)
         w.parquet(stage)
-        return [
-            os.path.join(stage, f)
-            for f in os.listdir(stage)
-            if f.endswith(".parquet")
-        ]
+        return _parquet_parts(stage)
+
+    def _stage_nonempty(
+        self, df: DataFrame, max_records_per_file: int | None, mapping: list
+    ) -> tuple[list[str], int]:
+        """Stage ``df`` and return its non-empty files plus their row
+        total. Spark can emit a schema-only empty part; those are removed,
+        and so is the stage dir when nothing is left. The row count comes
+        from the footers (memoized — ``_commit`` reads the same ones), so
+        no count job runs the plan a second time."""
+        staged = self._stage_files(df, max_records_per_file, mapping=mapping)
+        rows = {f: _parquet_file_meta(f)[0] for f in staged}
+        for f in staged:
+            if rows[f] == 0:
+                os.remove(f)
+        files = [f for f in staged if rows[f] > 0]
+        if staged and not files:
+            shutil.rmtree(os.path.dirname(staged[0]), ignore_errors=True)
+        return files, sum(rows.values())
+
+    def _change_dir(self) -> str:
+        """A fresh directory for one commit's CDF change files."""
+        return os.path.join(self.path, f"_changes/chg-{uuid.uuid4().hex[:12]}")
 
     def _discard_staged(self, paths: list[str]) -> None:
         """Remove files this writer staged for a commit that lost the
@@ -1482,7 +1514,7 @@ class ParquetMergeTable:
             if (
                 ad.startswith(root + os.sep)
                 and os.path.isdir(ad)
-                and not any(f.endswith(".parquet") for f in os.listdir(ad))
+                and not _parquet_parts(ad)
             ):
                 shutil.rmtree(ad, ignore_errors=True)
 
@@ -1644,30 +1676,27 @@ class ParquetMergeTable:
         )
 
     def _scan(
-        self,
-        files: list[str],
-        delete_files: list[str],
-        mixed_schema: bool = False,
-        delete_rows: int | None = None,
-        schema=None,
-        mapping: list | None = None,
+        self, m: dict, files: list[str], schema=None, mapping: list | None = None
     ) -> DataFrame:
-        """Read data files with hidden position columns ``_file``/``_pos``
-        and any pending deletion vectors already applied. The delete side
-        broadcasts while its exact manifest-tracked row count stays under
-        DELETE_BROADCAST_MAX_ROWS — the normal MoR regime where deletes
-        are tiny. Past the threshold (a delete_where that hit a large
-        fraction of the table) the anti-join falls back to sort-merge:
-        slower, but it cannot OOM the driver, and compact() is the cure."""
+        """Read ``files`` of manifest ``m`` with hidden position columns
+        ``_file``/``_pos`` and ``m``'s pending deletion vectors already
+        applied. ``mapping`` defaults to ``m``'s column mapping. The delete
+        side broadcasts while its exact manifest-tracked row count stays
+        under DELETE_BROADCAST_MAX_ROWS — the normal MoR regime where
+        deletes are tiny. Past the threshold (a delete_where that hit a
+        large fraction of the table) the anti-join falls back to
+        sort-merge: slower, but it cannot OOM the driver, and compact() is
+        the cure."""
         df = self._read_data(
-            files, mixed_schema, schema, mapping, with_position=True
+            files,
+            m["mixed_schema"],
+            schema,
+            m["column_mapping"] if mapping is None else mapping,
+            with_position=True,
         )
-        dels = self._delete_entries(delete_files)
+        dels = self._delete_entries(m["delete_files"])
         if dels is not None:
-            small = (
-                delete_rows is None
-                or delete_rows <= self.DELETE_BROADCAST_MAX_ROWS
-            )
+            small = m["delete_rows_total"] <= self.DELETE_BROADCAST_MAX_ROWS
             side = F.broadcast(dels) if small else dels.hint("merge")
             df = df.join(
                 side,
@@ -1678,21 +1707,10 @@ class ParquetMergeTable:
 
     def _live_scan(self, m: dict) -> DataFrame:
         """The current live rows of a resolved manifest (deletes applied)."""
-        return self._scan(
-            m["files"],
-            m["delete_files"],
-            m["mixed_schema"],
-            m["delete_rows_total"],
-            schema=self._table_schema(m),
-            mapping=m["column_mapping"],
-        )
+        return self._scan(m, m["files"], schema=self._table_schema(m))
 
     def _carry_delete_files(
-        self,
-        pending_dels: list[str],
-        rewritten: list[str],
-        carried: list[str],
-        pending_rows: int | None = None,
+        self, m: dict, rewritten: list[str], carried: list[str]
     ) -> list[str]:
         """Deletion-vector carry across a partial rewrite: entries
         pointing at CARRIED files stay valid; entries for REWRITTEN
@@ -1702,6 +1720,7 @@ class ParquetMergeTable:
         manifest's exact pending-entry count (an upper bound on the kept
         entries) — a huge accumulated vector is rewritten by
         proportionally many tasks, never funneled through one."""
+        pending_dels = m["delete_files"]
         if not pending_dels:
             return []
         if not rewritten:
@@ -1710,14 +1729,10 @@ class ParquetMergeTable:
         kept = self._delete_entries(pending_dels).filter(
             F.col("file_path").isin(carried_abs)
         )
-        n_parts = max(1, -(-(pending_rows or 0) // self.DELETE_ROWS_PER_FILE))
+        n_parts = max(1, -(-m["delete_rows_total"] // self.DELETE_ROWS_PER_FILE))
         keep_dir = os.path.join(self.path, f"_deletes/del-{uuid.uuid4().hex[:12]}")
         kept.coalesce(n_parts).write.mode("overwrite").parquet(keep_dir)
-        parts = [
-            os.path.join(keep_dir, f)
-            for f in os.listdir(keep_dir)
-            if f.endswith(".parquet")
-        ]
+        parts = _parquet_parts(keep_dir)
         # drop zero-row parts (coalesce can emit schema-only files); an
         # entirely empty carry means every pending entry died with the
         # rewrite
@@ -1726,6 +1741,24 @@ class ParquetMergeTable:
             return live_parts
         shutil.rmtree(keep_dir, ignore_errors=True)
         return []
+
+    def _touched(
+        self, m: dict, scanned: list[str], cond_true: Column, schema
+    ) -> list[str]:
+        """The files among ``scanned`` holding a live row where
+        ``cond_true`` holds, as manifest paths. Only ``_file`` is
+        selected, so Catalyst prunes the scan to the condition's columns
+        (pinned by tests/test_plan_shapes.py). ``schema`` is the full
+        table schema: a stats-pruned subset may predate a schema
+        evolution."""
+        if not scanned:
+            return []
+        abs_to_orig = {os.path.abspath(f): f for f in scanned}
+        live = self._scan(m, scanned, schema=schema)
+        return sorted(
+            abs_to_orig.get(r["_file"], r["_file"])
+            for r in live.filter(cond_true).select("_file").distinct().collect()
+        )
 
     @staticmethod
     def _violation_cond(expr: str) -> Column:
@@ -1763,6 +1796,46 @@ class ParquetMergeTable:
                     f"CHECK constraint '{name}' ({expr}) is violated by "
                     "rows this operation writes — aborted, table unchanged"
                 )
+
+    def _commit_rewrite(
+        self,
+        m: dict,
+        op: str,
+        stats: dict,
+        new_files: list[str],
+        untouched: list[str],
+        carried_dels: list[str],
+        change_files: list[str],
+        mapping: list | None = None,
+        **commit_kw,
+    ) -> dict:
+        """Commit a copy-on-write rewrite of ``m``: CHECK constraints
+        validate only the files this write staged, then ``_commit``. On a
+        violation everything staged — data, the rewritten vector carry,
+        change files — is removed. ``mapping`` (default ``m``'s) is the
+        column mapping the new files were written under. Returns
+        ``stats`` with the new version."""
+        mapping = m["column_mapping"] if mapping is None else mapping
+        fresh_data = [f for f in new_files if f not in set(untouched)]
+        self._check_constraints(
+            fresh_data,
+            m.get("constraints", {}),
+            discard=fresh_data
+            + [f for f in carried_dels if f not in set(m["delete_files"])]
+            + change_files,
+            mapping=mapping,
+        )
+        stats["version"] = self._commit(
+            m,
+            new_files,
+            op,
+            stats,
+            delete_files=carried_dels,
+            change_files=change_files,
+            column_mapping=mapping,
+            **commit_kw,
+        )
+        return stats
 
     def add_constraint(self, name: str, expr: str) -> dict:
         """Delta ``ALTER TABLE ADD CONSTRAINT name CHECK (expr)``:
@@ -2088,20 +2161,10 @@ class ParquetMergeTable:
                 pairs.append([c, phys])
                 taken.add(phys)
             stage_mapping = pairs
-        staged = self._stage_files(
-            df.select(*table_cols, *extra),
-            max_records_per_file,
-            mapping=stage_mapping,
+        files, n_rows = self._stage_nonempty(
+            df.select(*table_cols, *extra), max_records_per_file, stage_mapping
         )
-        staged_rows = {f: _parquet_file_meta(f)[0] for f in staged}
-        for f in staged:
-            if staged_rows[f] == 0:
-                os.remove(f)
-        files = [f for f in staged if staged_rows[f] > 0]
-        n_rows = sum(staged_rows.values())
         if not files:
-            if staged:
-                shutil.rmtree(os.path.dirname(staged[0]), ignore_errors=True)
             if txn is None:
                 return {"rows_appended": 0, "version": m["version"]}
             # an EMPTY batch still records its txn version (Delta does
@@ -2291,9 +2354,8 @@ class ParquetMergeTable:
         """Compile a ``(col, op, literal)`` conjunction into its two
         halves: the EXACT residual row filter (a Column) and the
         conservative skip-conjunct list `_file_can_match` consumes.
-        Shared by ``read``, ``delete_where``, ``update_where`` and
-        ``overwrite_where`` so every stats-pruned path applies the
-        identical semantics.
+        Shared by ``_prune`` and merge's by-source clauses so every
+        stats-pruned path applies the identical semantics.
 
         ``schema`` (the manifest's, when tracked) makes the compilation
         TYPE-AWARE for timestamp_ntz columns: their stats and values are
@@ -2389,6 +2451,23 @@ class ParquetMergeTable:
         )
         return residual, skip
 
+    def _prune(self, m: dict, condition) -> tuple[Column, list[str]]:
+        """``condition`` as a row filter plus the files of ``m`` that may
+        hold a match. The ``(col, op, literal)`` tuple form compiles
+        through ``_predicate`` and drops files whose manifest stats rule
+        it out; an opaque Column can't be introspected, so every file
+        stays a candidate."""
+        if not isinstance(condition, (list, tuple)):
+            return condition, m["files"]
+        residual, skip = self._predicate(list(condition), self._table_schema(m))
+        # manifest stats are keyed by PHYSICAL column names (footer
+        # truth) — a rename costs no stats: map the conjuncts over
+        skip = self._physical_conjuncts(skip, m["column_mapping"])
+        stats = m["file_stats"]
+        return residual, [
+            f for f in m["files"] if _file_can_match(stats.get(f), skip)
+        ]
+
     def read(
         self,
         version: int | None = None,
@@ -2422,12 +2501,7 @@ class ParquetMergeTable:
         mapping = m["column_mapping"]
         residual = None
         if where:
-            residual, skip = self._predicate(where, self._table_schema(m))
-            stats = m["file_stats"]
-            # manifest stats are keyed by PHYSICAL column names (footer
-            # truth) — a rename costs no stats: map the conjuncts over
-            skip = self._physical_conjuncts(skip, mapping)
-            files = [f for f in files if _file_can_match(stats.get(f), skip)]
+            residual, files = self._prune(m, where)
         if not files:  # every file skipped: empty result, correct schema
             return self.spark.createDataFrame([], self._schema_or_read(m))
         ts = self._table_schema(m)
@@ -2442,14 +2516,7 @@ class ParquetMergeTable:
                     files, m["mixed_schema"], mapping=mapping
                 ).columns
             )
-            df = self._scan(
-                files,
-                m["delete_files"],
-                m["mixed_schema"],
-                m["delete_rows_total"],
-                schema=ts,
-                mapping=mapping,
-            ).select(*cols)
+            df = self._scan(m, files, schema=ts).select(*cols)
         return df.filter(residual) if residual is not None else df
 
     def history(self) -> list[dict]:
@@ -2485,89 +2552,51 @@ class ParquetMergeTable:
         m = self._manifest(self.current_version())
         if self._txn_already_applied(m, txn):
             return {"version": m["version"], "txn_skipped": True}
-        files, dels, mixed = m["files"], m["delete_files"], m["mixed_schema"]
-        mapping = m["column_mapping"]
-        scanned = files
-        if isinstance(condition, (list, tuple)):
-            condition, skip = self._predicate(
-                list(condition), self._table_schema(m)
+        condition, scanned = self._prune(m, condition)
+        stats = {"rows_deleted": 0, "files_scanned": len(scanned)}
+        dels, change_files = m["delete_files"], []
+        if scanned:
+            live = self._scan(m, scanned, schema=self._schema_or_read(m))
+            data_cols = [c for c in live.columns if c not in ("_file", "_pos")]
+            # one pass over the table: victims (data cols + position) are
+            # materialized in executor memory+disk and the two derived
+            # artifacts below stream straight from the checkpoint. The
+            # victim count rides the same pass as an Observation metric,
+            # so no separate count job runs.
+            from pyspark.sql import Observation
+
+            obs = Observation()
+            victims = (
+                live.filter(condition)
+                .observe(obs, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
             )
-            fstats = m["file_stats"]
-            skip = self._physical_conjuncts(skip, mapping)
-            scanned = [f for f in files if _file_can_match(fstats.get(f), skip)]
-        if not scanned:
-            new_v = self._commit(
-                m, files, "delete",
-                {"rows_deleted": 0, "files_scanned": 0},
-                delete_files=dels, mixed_schema=mixed, txn=txn,
-            )
-            return {"rows_deleted": 0, "version": new_v, "files_scanned": 0}
-        full_schema = self._schema_or_read(m)
-        live = self._scan(
-            scanned, dels, mixed, m["delete_rows_total"],
-            schema=full_schema, mapping=mapping,
+            n_victims = stats["rows_deleted"] = int(obs.get["n"])
+            if n_victims:
+                # the writer task counts are proportional to the exact
+                # victim count, so a delete matching a large fraction of
+                # the table never pushes its rows through a single task
+                n_del = max(1, -(-n_victims // self.DELETE_ROWS_PER_FILE))
+                entry_path = os.path.join(
+                    self.path, f"_deletes/del-{uuid.uuid4().hex[:12]}"
+                )
+                victims.select(
+                    F.col("_file").alias("file_path"),
+                    F.col("_pos").alias("row_index"),
+                ).coalesce(n_del).write.mode("overwrite").parquet(entry_path)
+                n_chg = max(1, -(-n_victims // self.CHANGE_ROWS_PER_FILE))
+                change_path = self._change_dir()
+                victims.select(*data_cols).withColumn(
+                    CHANGE_TYPE, F.lit("delete")
+                ).coalesce(n_chg).write.mode("overwrite").parquet(change_path)
+                dels = dels + _parquet_parts(entry_path)
+                change_files = _parquet_parts(change_path)
+                stats["delete_files_total"] = len(dels)
+        stats["version"] = self._commit(
+            m, m["files"], "delete", stats,
+            delete_files=dels, change_files=change_files,
+            mixed_schema=m["mixed_schema"], txn=txn,
         )
-        data_cols = [c for c in live.columns if c not in ("_file", "_pos")]
-
-        # one pass over the table: victims (data cols + position) are
-        # materialized in executor memory+disk rather than round-tripped
-        # through a scratch parquet dir (the old shape paid one write
-        # plus three re-reads of the same rows); the two derived
-        # artifacts below stream straight from the checkpoint. The
-        # victim count rides the same pass as an Observation metric —
-        # the old post-checkpoint .count() was a second (cheap but
-        # whole-frame) job per delete commit.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        victims = (
-            live.filter(condition)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_victims = int(obs.get["n"])
-        if n_victims == 0:
-            new_v = self._commit(
-                m, files, "delete",
-                {"rows_deleted": 0, "files_scanned": len(scanned)},
-                delete_files=dels, mixed_schema=mixed, txn=txn,
-            )
-            return {
-                "rows_deleted": 0,
-                "version": new_v,
-                "files_scanned": len(scanned),
-            }
-
-        # both artifacts derive from the staged victims file; the writer
-        # task count is proportional to the exact victim count, so a
-        # delete matching a large fraction of the table never pushes its
-        # (file, row) pairs through a single task
-        n_del_parts = max(1, -(-n_victims // self.DELETE_ROWS_PER_FILE))
-        entry_path = os.path.join(self.path, f"_deletes/del-{uuid.uuid4().hex[:12]}")
-        victims.select(
-            F.col("_file").alias("file_path"), F.col("_pos").alias("row_index")
-        ).coalesce(n_del_parts).write.mode("overwrite").parquet(entry_path)
-        n_chg_parts = max(1, -(-n_victims // self.CHANGE_ROWS_PER_FILE))
-        change_path = os.path.join(self.path, f"_changes/chg-{uuid.uuid4().hex[:12]}")
-        victims.select(*data_cols).withColumn(
-            CHANGE_TYPE, F.lit("delete")
-        ).coalesce(n_chg_parts).write.mode("overwrite").parquet(change_path)
-
-        def _parts(d: str) -> list[str]:
-            return [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
-
-        stats = {
-            "rows_deleted": n_victims,
-            "files_scanned": len(scanned),
-            "delete_files_total": len(dels) + len(_parts(entry_path)),
-        }
-        new_v = self._commit(
-            m, files, "delete", stats,
-            delete_files=dels + _parts(entry_path),
-            change_files=_parts(change_path),
-            mixed_schema=mixed, txn=txn,
-        )
-        stats["version"] = new_v
         return stats
 
     def cdf_data_schema(
@@ -2771,8 +2800,6 @@ class ParquetMergeTable:
             # streaming-batch redelivery, not new work
             return {"version": m["version"], "txn_skipped": True}
         all_files = m["files"]
-        pending_dels = m["delete_files"]
-        was_mixed = m["mixed_schema"]
         mapping = m["column_mapping"]
         tgt_schema = self._schema_or_read(m)
         # type alignment FIRST — before any join can hit Spark's implicit
@@ -2930,10 +2957,7 @@ class ParquetMergeTable:
                 fire_any = fire_parts[0]
                 for p in fire_parts[1:]:
                     fire_any = fire_any | p
-                bs_live = self._scan(
-                    cand, pending_dels, was_mixed, m["delete_rows_total"],
-                    schema=read_schema, mapping=mapping,
-                )
+                bs_live = self._scan(m, cand, schema=read_schema)
                 src_keys = source.select(*on)
                 key_side = (
                     F.broadcast(src_keys) if small_src else src_keys.hint("merge")
@@ -2949,13 +2973,8 @@ class ParquetMergeTable:
                 touched = sorted(set(touched) | set(bs_victim_files))
         untouched = [f for f in all_files if f not in set(touched)]
 
-        def _parts(d: str) -> list[str]:
-            return [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
-
         # 3) deletion-vector carry across the partial rewrite
-        carried_dels = self._carry_delete_files(
-            pending_dels, touched, untouched, m["delete_rows_total"]
-        )
+        carried_dels = self._carry_delete_files(m, touched, untouched)
 
         # 4) row-level merge over ONLY the touched files
         stats = {
@@ -2985,7 +3004,7 @@ class ParquetMergeTable:
                 "merge schema evolution",
             )
         out_target_cols = target_cols + new_cols
-        now_mixed = was_mixed or (
+        now_mixed = m["mixed_schema"] or (
             (bool(new_cols) or bool(widen)) and bool(untouched)
         )
         # a literal marker column decides matched-ness after the left
@@ -3019,12 +3038,8 @@ class ParquetMergeTable:
         if touched:
             # explicit FULL logical schema: the touched SUBSET may consist
             # entirely of pre-evolution files whose merged footer schema
-            # under-covers — absent columns surface as typed NULLs (the
-            # _bin_pack r6 fix, applied to every subset scan)
-            tgt = self._scan(
-                touched, pending_dels, was_mixed, m["delete_rows_total"],
-                schema=read_schema, mapping=mapping,
-            ).select(*target_cols)
+            # under-covers — absent columns surface as typed NULLs
+            tgt = self._scan(m, touched, schema=read_schema).select(*target_cols)
             src_side = (
                 F.broadcast(src_aliased) if small_src else src_aliased.hint("merge")
             )
@@ -3197,15 +3212,13 @@ class ParquetMergeTable:
                         F.when(F.col(CHANGE_TYPE) == "delete", 1).otherwise(0)
                     ).alias("n_del"),
                 )
-                chg_dir = os.path.join(
-                    self.path, f"_changes/chg-{uuid.uuid4().hex[:12]}"
-                )
+                chg_dir = self._change_dir()
                 chg.write.mode("overwrite").parquet(chg_dir)
                 got = obs.get
                 stats["rows_updated"] = int(got["n_upd"] or 0)
                 stats["rows_deleted"] = int(got["n_del"] or 0)
                 if got["n_rows"]:
-                    change_files = _parts(chg_dir)
+                    change_files = _parquet_parts(chg_dir)
                 else:
                     shutil.rmtree(chg_dir, ignore_errors=True)
 
@@ -3267,21 +3280,11 @@ class ParquetMergeTable:
                 return F.lit(None).cast(col_t).alias(c)
 
             inserts = unmatched.select(*[_ins_col(c) for c in out_target_cols])
-            # single pass: stage the anti-join result directly, then take
-            # the inserted-row count from the freshly written parquet
-            # footers (memoized — _commit reads the same ones). The old
-            # pre-write .count() ran the scan + anti-join twice.
-            staged = self._stage_files(
-                inserts, max_records_per_file, mapping=out_mapping
+            # single pass: stage the anti-join result directly; the row
+            # count comes from the written footers
+            insert_files, stats["rows_inserted"] = self._stage_nonempty(
+                inserts, max_records_per_file, out_mapping
             )
-            staged_rows = {f: _parquet_file_meta(f)[0] for f in staged}
-            stats["rows_inserted"] = sum(staged_rows.values())
-            insert_files = [f for f in staged if staged_rows[f] > 0]
-            for f in staged:  # Spark can emit a schema-only empty part
-                if staged_rows[f] == 0:
-                    os.remove(f)
-            if staged and not insert_files:
-                shutil.rmtree(os.path.dirname(staged[0]), ignore_errors=True)
             new_files += insert_files
 
         if new_cols:
@@ -3296,34 +3299,17 @@ class ParquetMergeTable:
             list(read_schema.fields)
             + [StructField(c, src_types[c], True) for c in new_cols]
         )
-        # CHECK constraints: validate only the rows this merge WROTE
-        # (rewritten + inserted files); carried files were valid already
-        fresh_data = [f for f in new_files if f not in set(untouched)]
-        self._check_constraints(
-            fresh_data,
-            m.get("constraints", {}),
-            discard=fresh_data
-            + [f for f in carried_dels if f not in set(pending_dels)]
-            + change_files,
+        self._commit_rewrite(
+            m, "merge", stats, new_files, untouched, carried_dels, change_files,
             mapping=out_mapping,
-        )
-        new_v = self._commit(
-            m,
-            new_files,
-            "merge",
-            stats,
-            delete_files=carried_dels,
-            change_files=change_files,
             insert_files=insert_files,
             mixed_schema=now_mixed,
             txn=txn,
-            column_mapping=out_mapping,
             schema_json=_schema_json_of(out_schema),
         )
         if touched:
             # prompt release (tracked as a safety net for error paths)
             joined.unpersist()
-        stats["version"] = new_v
         return stats
 
     def overwrite_where(
@@ -3357,25 +3343,11 @@ class ParquetMergeTable:
         the table. ``txn_app_id``/``txn_version``: idempotent-writer
         stamp — what makes a foreachBatch partition-overwrite sink (the
         streaming replaceWhere pattern) exactly-once."""
-        spark = self.spark
         txn = self._txn_of(txn_app_id, txn_version)
         m = self._manifest(self.current_version())
         if self._txn_already_applied(m, txn):
             return {"version": m["version"], "txn_skipped": True}
-        all_files = m["files"]
-        pending_dels = m["delete_files"]
-        mixed = m["mixed_schema"]
-        mapping = m["column_mapping"]
-        scanned = all_files
-        if isinstance(condition, (list, tuple)):
-            condition, skip = self._predicate(
-                list(condition), self._table_schema(m)
-            )
-            fstats = m["file_stats"]
-            skip = self._physical_conjuncts(skip, mapping)
-            scanned = [
-                f for f in all_files if _file_can_match(fstats.get(f), skip)
-            ]
+        condition, scanned = self._prune(m, condition)
         # three-valued logic: rows where the condition evaluates to NULL
         # neither match the predicate nor may they sneak in as
         # replacements — fold NULL to FALSE once and use it everywhere
@@ -3402,48 +3374,25 @@ class ParquetMergeTable:
                 "replacement rows must satisfy the overwrite condition"
             )
 
-        abs_to_orig = {os.path.abspath(f): f for f in all_files}
-        if scanned:
-            # full schema on BOTH subset scans (see merge above)
-            live = self._scan(
-                scanned, pending_dels, mixed, m["delete_rows_total"],
-                schema=full_schema, mapping=mapping,
-            )
-            touched = sorted(
-                abs_to_orig.get(r["_file"], r["_file"])
-                for r in live.filter(cond_true).select("_file").distinct().collect()
-            )
-        else:
-            touched = []
-        untouched = [f for f in all_files if f not in set(touched)]
-
-        def _parts(d: str) -> list[str]:
-            return [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
-
+        touched = self._touched(m, scanned, cond_true, full_schema)
+        untouched = [f for f in m["files"] if f not in set(touched)]
         # deletion-vector carry (same rule as MERGE: touched-file entries
         # die with the rewrite, untouched-file entries stay valid)
-        carried_dels = self._carry_delete_files(
-            pending_dels, touched, untouched, m["delete_rows_total"]
-        )
+        carried_dels = self._carry_delete_files(m, touched, untouched)
 
         new_files: list[str] = list(untouched)
         change_files: list[str] = []
         n_removed = 0
         if touched:
-            tgt = self._scan(
-                touched, pending_dels, mixed, m["delete_rows_total"],
-                schema=full_schema, mapping=mapping,
-            ).select(*target_cols)
+            # full schema on the subset scan (see _touched)
+            tgt = self._scan(m, touched, schema=full_schema).select(*target_cols)
             new_files += self._stage_files(
-                tgt.filter(~cond_true), max_records_per_file, mapping=mapping
+                tgt.filter(~cond_true), max_records_per_file,
+                mapping=m["column_mapping"],
             )
-            chg_dir = os.path.join(
-                self.path, f"_changes/chg-{uuid.uuid4().hex[:12]}"
-            )
+            chg_dir = self._change_dir()
             # the removed-row count rides the change-file write as an
-            # Observation metric (the merge/update_where pattern) — the
-            # old shape re-read the freshly written parquet just to
-            # count it
+            # Observation metric (the merge/update_where pattern)
             from pyspark.sql import Observation
 
             obs = Observation()
@@ -3454,42 +3403,27 @@ class ParquetMergeTable:
             ).parquet(chg_dir)
             n_removed = int(obs.get["n"])
             if n_removed:
-                change_files = _parts(chg_dir)
+                change_files = _parquet_parts(chg_dir)
 
         insert_files = self._stage_files(
             replacement.select(*target_cols), max_records_per_file,
-            mapping=mapping,
+            mapping=m["column_mapping"],
         )
         new_files += insert_files
         stats = {
-            "files_total": len(all_files),
+            "files_total": len(m["files"]),
             "files_scanned": len(scanned),
             "files_touched": len(touched),
             "files_carried": len(untouched),
             "rows_removed": n_removed,
         }
-        fresh_data = [f for f in new_files if f not in set(untouched)]
-        self._check_constraints(
-            fresh_data,
-            m.get("constraints", {}),
-            discard=fresh_data
-            + [f for f in carried_dels if f not in set(pending_dels)]
-            + change_files,
-            mapping=mapping,
-        )
-        new_v = self._commit(
-            m,
-            new_files,
-            "overwrite_where",
-            stats,
-            delete_files=carried_dels,
-            change_files=change_files,
+        return self._commit_rewrite(
+            m, "overwrite_where", stats, new_files, untouched, carried_dels,
+            change_files,
             insert_files=insert_files,
-            mixed_schema=mixed,
+            mixed_schema=m["mixed_schema"],
             txn=txn,
         )
-        stats["version"] = new_v
-        return stats
 
     def update_where(
         self,
@@ -3518,20 +3452,7 @@ class ParquetMergeTable:
         m = self._manifest(self.current_version())
         if self._txn_already_applied(m, txn):
             return {"version": m["version"], "txn_skipped": True}
-        all_files = m["files"]
-        pending_dels = m["delete_files"]
-        mixed = m["mixed_schema"]
-        mapping = m["column_mapping"]
-        scanned = all_files
-        if isinstance(condition, (list, tuple)):
-            condition, skip = self._predicate(
-                list(condition), self._table_schema(m)
-            )
-            fstats = m["file_stats"]
-            skip = self._physical_conjuncts(skip, mapping)
-            scanned = [
-                f for f in all_files if _file_can_match(fstats.get(f), skip)
-            ]
+        condition, scanned = self._prune(m, condition)
         cond_true = F.coalesce(condition, F.lit(False))
         full_schema = self._schema_or_read(m)
         target_cols = [f.name for f in full_schema.fields]
@@ -3539,28 +3460,9 @@ class ParquetMergeTable:
         if unknown:
             raise MergeError(f"UPDATE sets unknown column(s): {unknown}")
 
-        abs_to_orig = {os.path.abspath(f): f for f in all_files}
-        if scanned:
-            # full schema on BOTH subset scans: a stats-pruned or touched
-            # subset may predate a schema evolution (see merge above)
-            live = self._scan(
-                scanned, pending_dels, mixed, m["delete_rows_total"],
-                schema=full_schema, mapping=mapping,
-            )
-            touched = sorted(
-                abs_to_orig.get(r["_file"], r["_file"])
-                for r in live.filter(cond_true).select("_file").distinct().collect()
-            )
-        else:
-            touched = []
-        untouched = [f for f in all_files if f not in set(touched)]
-
-        def _parts(d: str) -> list[str]:
-            return [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
-
-        carried_dels = self._carry_delete_files(
-            pending_dels, touched, untouched, m["delete_rows_total"]
-        )
+        touched = self._touched(m, scanned, cond_true, full_schema)
+        untouched = [f for f in m["files"] if f not in set(touched)]
+        carried_dels = self._carry_delete_files(m, touched, untouched)
         new_files: list[str] = list(untouched)
         change_files: list[str] = []
         rows_updated = 0
@@ -3574,10 +3476,9 @@ class ParquetMergeTable:
             # update's footprint, not the table. Unpersisted at return;
             # tracked as a safety net for error paths.
             tgt = _op_cache.track(
-                self._scan(
-                    touched, pending_dels, mixed, m["delete_rows_total"],
-                    schema=full_schema, mapping=mapping,
-                ).select(*target_cols).persist()
+                self._scan(m, touched, schema=full_schema)
+                .select(*target_cols)
+                .persist()
             )
 
             col_types = {f.name: f.dataType for f in full_schema.fields}
@@ -3607,7 +3508,7 @@ class ParquetMergeTable:
             new_files += self._stage_files(
                 tgt.select(*[_upd(c) for c in target_cols]),
                 max_records_per_file,
-                mapping=mapping,
+                mapping=m["column_mapping"],
             )
             fired = tgt.filter(cond_true)
             post = fired.select(
@@ -3623,13 +3524,11 @@ class ParquetMergeTable:
             chg = fired.withColumn(
                 CHANGE_TYPE, F.lit("update_preimage")
             ).unionByName(post.withColumn(CHANGE_TYPE, F.lit("update_postimage")))
-            chg_dir = os.path.join(
-                self.path, f"_changes/chg-{uuid.uuid4().hex[:12]}"
-            )
+            chg_dir = self._change_dir()
             chg.write.mode("overwrite").parquet(chg_dir)
             # pre+post pairs → fired-row count from the footers _commit
             # reads anyway; no extra counting job
-            parts = _parts(chg_dir)
+            parts = _parquet_parts(chg_dir)
             rows_updated = sum(_parquet_file_meta(f)[0] for f in parts) // 2
             if rows_updated:
                 change_files = parts
@@ -3637,34 +3536,19 @@ class ParquetMergeTable:
                 shutil.rmtree(chg_dir, ignore_errors=True)
 
         stats = {
-            "files_total": len(all_files),
+            "files_total": len(m["files"]),
             "files_scanned": len(scanned),
             "files_touched": len(touched),
             "files_carried": len(untouched),
             "rows_updated": rows_updated,
         }
-        fresh_data = [f for f in new_files if f not in set(untouched)]
-        self._check_constraints(
-            fresh_data,
-            m.get("constraints", {}),
-            discard=fresh_data
-            + [f for f in carried_dels if f not in set(pending_dels)]
-            + change_files,
-            mapping=mapping,
-        )
-        new_v = self._commit(
-            m,
-            new_files,
-            "update",
-            stats,
-            delete_files=carried_dels,
-            change_files=change_files,
-            mixed_schema=mixed,
+        self._commit_rewrite(
+            m, "update", stats, new_files, untouched, carried_dels, change_files,
+            mixed_schema=m["mixed_schema"],
             txn=txn,
         )
         if touched:
             tgt.unpersist()
-        stats["version"] = new_v
         return stats
 
     def clone(
@@ -3820,6 +3704,37 @@ class ParquetMergeTable:
         )
         return {"version": v, "files_written": len(files)}
 
+    def _repack(
+        self,
+        m: dict,
+        op: str,
+        stats: dict,
+        rewritten: list[str],
+        carried: list[str],
+        rows: DataFrame,
+        max_records_per_file: int | None,
+    ) -> dict:
+        """The layout-rewrite tail of bin-packing and the vector purge:
+        stage ``rows`` (the live rows of ``rewritten``), carry the other
+        files and their deletion vectors by reference, and commit. No
+        CHECK constraint runs: every row was valid when first written."""
+        new_files = list(carried) + self._stage_files(
+            rows, max_records_per_file, mapping=m["column_mapping"]
+        )
+        carried_dels = self._carry_delete_files(m, rewritten, carried)
+        stats["files_written"] = len(new_files) - len(carried)
+        stats["version"] = self._commit(
+            m,
+            new_files,
+            op,
+            stats,
+            delete_files=carried_dels,
+            # carried files may predate a schema evolution; only a full
+            # rewrite clears the mixed flag
+            mixed_schema=m["mixed_schema"] and bool(carried),
+        )
+        return stats
+
     def _bin_pack(
         self,
         m: dict,
@@ -3849,44 +3764,19 @@ class ParquetMergeTable:
         # typed NULLs, narrow pre-widening files promote) or the select
         # below would raise on a legitimate mixed-schema table state
         full_schema = self._schema_or_read(m)
-        target_cols = [f.name for f in full_schema.fields]
-        df = self._scan(
-            packed,
-            m["delete_files"],
-            m["mixed_schema"],
-            m["delete_rows_total"],
-            schema=full_schema,
-            mapping=m["column_mapping"],
-        ).select(*target_cols)
+        df = self._scan(m, packed, schema=full_schema).select(
+            *full_schema.fieldNames()
+        )
         n_out = max(1, math.ceil(sum(sizes.get(f, 0) for f in packed) / threshold))
         out = (
             df.repartitionByRange(n_out, F.col(sort_col))
             if sort_col
             else df.repartition(n_out)
         )
-        new_files = list(carried) + self._stage_files(
-            out, max_records_per_file, mapping=m["column_mapping"]
+        stats = {"files_packed": len(packed), "files_carried": len(carried)}
+        return self._repack(
+            m, "compact", stats, packed, carried, out, max_records_per_file
         )
-        carried_dels = self._carry_delete_files(
-            m["delete_files"], packed, carried, m["delete_rows_total"]
-        )
-        stats = {
-            "files_packed": len(packed),
-            "files_carried": len(carried),
-            "files_written": len(new_files) - len(carried),
-        }
-        new_v = self._commit(
-            m,
-            new_files,
-            "compact",
-            stats,
-            delete_files=carried_dels,
-            # carried files may predate a schema evolution; only a
-            # full rewrite clears the mixed flag
-            mixed_schema=m["mixed_schema"] and bool(carried),
-        )
-        stats["version"] = new_v
-        return stats
 
     def _purge_vectors(
         self,
@@ -3935,41 +3825,20 @@ class ParquetMergeTable:
             return none
         carried = [f for f in m["files"] if f not in set(victims)]
         full_schema = self._schema_or_read(m)
-        live = self._scan(
-            victims,
-            dels,
-            m["mixed_schema"],
-            m["delete_rows_total"],
-            schema=full_schema,
-            mapping=m["column_mapping"],
-        ).select(*full_schema.fieldNames())
-        new_files = list(carried) + self._stage_files(
-            live, max_records_per_file, mapping=m["column_mapping"]
-        )
-        carried_dels = self._carry_delete_files(
-            dels, victims, carried, m["delete_rows_total"]
+        live = self._scan(m, victims, schema=full_schema).select(
+            *full_schema.fieldNames()
         )
         stats = {
             "files_purged": len(victims),
             "files_carried": len(carried),
-            "files_written": len(new_files) - len(carried),
             "vector_rows_purged": sum(
                 per_file.get(os.path.abspath(f), 0) for f in victims
             ),
             "purge_threshold": threshold,
         }
-        new_v = self._commit(
-            m,
-            new_files,
-            "reorg_purge",
-            stats,
-            delete_files=carried_dels,
-            # carried files may predate a schema evolution; only a full
-            # rewrite clears the mixed flag
-            mixed_schema=m["mixed_schema"] and bool(carried),
+        return self._repack(
+            m, "reorg_purge", stats, victims, carried, live, max_records_per_file
         )
-        stats["version"] = new_v
-        return stats
 
     def vacuum(
         self,
@@ -4268,12 +4137,7 @@ class ParquetMergeTable:
             # physical names behind them are version-independent (renames
             # never rewrite), so the tgt mapping reads cur files too
             return self._scan(
-                scan,
-                m["delete_files"],
-                m["mixed_schema"],
-                m["delete_rows_total"],
-                schema=diff_schema,
-                mapping=tgt["column_mapping"],
+                m, scan, schema=diff_schema, mapping=tgt["column_mapping"]
             ).select(*cols)
 
         cur_rows = _visible(scan_cur, cur)
@@ -4402,15 +4266,9 @@ class ParquetMergeTable:
                         "constraint first to force)"
                     )
             n_parts = max(1, -(-(n_del + n_ins) // self.CHANGE_ROWS_PER_FILE))
-            chg_dir = os.path.join(
-                self.path, f"_changes/chg-{uuid.uuid4().hex[:12]}"
-            )
+            chg_dir = self._change_dir()
             staged.coalesce(n_parts).write.mode("overwrite").parquet(chg_dir)
-            change_files = [
-                os.path.join(chg_dir, f)
-                for f in os.listdir(chg_dir)
-                if f.endswith(".parquet")
-            ]
+            change_files = _parquet_parts(chg_dir)
 
         stats = {
             "restored_version": version,
@@ -4671,9 +4529,8 @@ def spool_changes(
         tmp = os.path.join(spool_dir, f".spool-{uuid.uuid4().hex[:12]}")
         if n_parts == 1:
             df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            parts = [p for p in os.listdir(tmp) if p.endswith(".parquet")]
             os.rename(
-                os.path.join(tmp, parts[0]),
+                _parquet_parts(tmp)[0],
                 os.path.join(spool_dir, f"cdf-v{v:010d}.parquet"),
             )
             shutil.rmtree(tmp, ignore_errors=True)

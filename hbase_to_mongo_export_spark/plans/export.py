@@ -17,6 +17,7 @@ persists it once, so each (nondeterministic) UDF runs once per row.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -26,6 +27,8 @@ from pyspark.sql import functions as F
 from ..functions import crypto, sanitise
 from ..functions.normalize import normalize_udf
 from ..sources import envelope as env
+
+logger = logging.getLogger(__name__)
 
 
 @dataclass
@@ -68,6 +71,7 @@ class ExportResult:
     files: list[str]
     manifest_files: list[str]
     metrics: dict = field(default_factory=dict)  # the sink's row/byte counters
+    error: str | None = None    # "<Type>: <message>" of a failed export
 
 
 def _tagged(source: DataFrame, cfg: ExportConfig) -> DataFrame:
@@ -232,9 +236,12 @@ def run_export(
             in ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND")
         )
         status = "Table_Unavailable" if unavailable else "Export_Failed"
+        logger.exception("export of %s ended %s", cfg.topic, status)
         set_status(status)
         if metrics is not None:
             metrics.inc("export_failures")
-        return ExportResult(cfg.topic, status, 0, 0, [], [])
+        return ExportResult(
+            cfg.topic, status, 0, 0, [], [], error=f"{type(e).__name__}: {e}"
+        )
     finally:
         tagged.unpersist()

@@ -89,12 +89,6 @@ def morton_code_n(cols: list[Column], bits: int = ZORDER_BITS) -> Column:
     return code
 
 
-def morton_code(a: Column, b: Column, bits: int = ZORDER_BITS) -> Column:
-    """Interleave the low ``bits`` bits of two non-negative int columns
-    into a single Z-order key (a's bits in even positions)."""
-    return morton_code_n([a, b], bits)
-
-
 def quantile_edges(
     df: DataFrame,
     cols: list[str],

@@ -84,6 +84,30 @@ def test_export_subcommand_missing_source(tmp_path, capsys, spark):
     assert out["status"] == "Table_Unavailable"
 
 
+def test_export_subcommand_failure_prints_cause(tmp_path, capsys, spark):
+    import importlib.util
+
+    import pytest
+
+    from hbase_to_mongo_export_spark.sources import fixtures
+
+    if importlib.util.find_spec("lz4") is not None:
+        pytest.skip("the lz4 package is installed, so an lz4 export succeeds")
+    src = str(tmp_path / "src")
+    fixtures.source_records(spark, n=10).write.parquet(src)
+    rc = main([
+        "export", "--topic", "db.database.collection",
+        "--source", src, "--output", str(tmp_path / "out"),
+        "--strict", "--compression", "lz4",
+    ])
+    assert rc == 1
+    captured = capsys.readouterr()
+    assert json.loads(captured.out.strip().splitlines()[-1])["status"] == (
+        "Export_Failed"
+    )
+    assert "ValueError: lz4 output compression requires" in captured.err
+
+
 def test_export_subcommand_metrics_file(tmp_path, capsys, spark):
     from hbase_to_mongo_export_spark.sources import fixtures
 
@@ -288,6 +312,15 @@ def test_table_subcommand_arg_errors(tmp_path, capsys, spark):
     assert main(["table", "read", tbl, "--range", "id,>=,notanumber"]) == 2
     capsys.readouterr()
     assert main(["table", "read", tbl, "--range", "id>=3"]) == 2  # bad shape
+
+
+def test_table_merge_error_exits_1(tmp_path, capsys, spark):
+    """Every table action reports a MergeError as exit 1 and its message,
+    not a traceback."""
+    tbl = str(tmp_path / "tbl")
+    argv = ["table", "compact", tbl, "--sort-col", "id", "--zorder", "id,val"]
+    assert main(argv) == 1
+    assert "not both" in capsys.readouterr().err
 
 
 def test_table_column_mapping_cli(tmp_path, capsys, spark):

@@ -360,6 +360,15 @@ class TestSinks:
         with _pytest.raises(ValueError, match="unknown compression"):
             sink_mod.check_compression("zstd-bogus")
 
+    def test_failed_export_keeps_its_cause(self, spark, tmp_path):
+        df = fixtures.source_records(spark, n=20)
+        result = run_export(
+            spark, df, cfg(tmp_path, strict_sink=True, compression="nonsense")
+        )
+        assert result.status == "Export_Failed"
+        assert result.error.startswith("ValueError: ")
+        assert "unknown compression" in result.error
+
 
 class TestConnectors:
     def test_unavailable_connectors_raise_clearly(self, spark, source):

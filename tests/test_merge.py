@@ -2745,9 +2745,9 @@ class TestRestoreScanPruning:
         scanned: list[list[str]] = []
         orig = table._scan
 
-        def spy(files, *a, **kw):
+        def spy(m, files, *a, **kw):
             scanned.append(sorted(files))
-            return orig(files, *a, **kw)
+            return orig(m, files, *a, **kw)
 
         table._scan = spy
         stats = table.restore(0)
@@ -4742,3 +4742,103 @@ class TestDottedColumnNames:
         ]))
         with pytest.raises(MergeError, match="contains '.'"):
             t.append(evil, schema_evolution=True)
+
+
+class TestWriterJobCounts:
+    """Pins the Spark job count of every writer on one small table (2,000
+    rows in 4 files, one CHECK constraint) and the rows it leaves: a
+    refactor of the copy-on-write plumbing must run the same actions."""
+
+    JOBS = {
+        "create": 1,
+        "add_constraint": 2,
+        "merge_upsert": 16,
+        "update_where": 7,
+        "overwrite_where": 9,
+        "delete_where": 3,
+        "append": 4,
+        "bin_pack": 6,
+        "purge_vectors": 8,
+        "read_where_count": 2,
+        "restore": 5,
+    }
+
+    def test_job_counts_and_rows(self, spark, tmp_path):
+        import uuid
+
+        sc = spark.sparkContext
+        run_id = uuid.uuid4().hex[:8]
+        jobs: dict[str, int] = {}
+
+        def op(name, fn):
+            group = f"writer-jobs-{run_id}-{name}"
+            sc.setJobGroup(group, name)
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            # job-start events reach the status store through the async
+            # listener bus; drain it before counting
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            return out
+
+        def rows(lo, hi, parts, name_expr, amount_expr):
+            return spark.range(lo, hi, 1, parts).selectExpr(
+                "id", f"{name_expr} AS name", f"{amount_expr} AS amount"
+            )
+
+        t = ParquetMergeTable(spark, str(tmp_path / "tbl"))
+        op("create", lambda: t.create(
+            rows(0, 2000, 4, "concat('n', id)", "cast(id AS double)")))
+        assert len(t._manifest(0)["files"]) == 4
+        op("add_constraint", lambda: t.add_constraint("nonneg", "amount >= 0"))
+        source = rows(0, 10, 1, "concat('x', id)", "cast(id AS double) + 1e6")
+        source = source.unionByName(
+            rows(2000, 2010, 1, "concat('new', id)", "cast(id AS double)"))
+        op("merge_upsert", lambda: t.merge(
+            source, on=["id"], when_matched_update={"amount": src("amount")}))
+        op("update_where", lambda: t.update_where(
+            [("id", "<", 100)], {"amount": F.col("amount") + 1}))
+        op("overwrite_where", lambda: t.overwrite_where(
+            [("id", ">=", 500), ("id", "<", 600)],
+            rows(500, 600, 1, "concat('r', id)", "7.0D")))
+        op("delete_where", lambda: t.delete_where(
+            [("id", ">=", 1900), ("id", "<", 2000)]))
+        op("append", lambda: t.append(
+            rows(3000, 3100, 1, "concat('a', id)", "cast(id AS double)")))
+        # pack the small insert/replacement/append files and carry the
+        # big ones, the vector-holding 1500..1999 file among them
+        m = t._manifest(t.current_version())
+        big = [m["file_bytes"][f] for f in m["files"] if m["file_rows"][f] >= 400]
+        small = [m["file_bytes"][f] for f in m["files"] if m["file_rows"][f] <= 100]
+        assert len(small) == 3 and max(small) < min(big)
+        packed = op("bin_pack", lambda: t.compact(
+            bin_pack_bytes=(max(small) + min(big)) // 2))
+        assert packed["files_packed"] == 3 and t._manifest(
+            t.current_version())["delete_files"]
+        op("purge_vectors", lambda: t.compact(purge_vectors_over=0.1))
+        assert not t._manifest(t.current_version())["delete_files"]
+        n_read = op("read_where_count",
+                    lambda: t.read(where=[("id", "<", 50)]).count())
+        final = {r["id"]: (r["name"], r["amount"]) for r in t.read().collect()}
+        op("restore", lambda: t.restore(1))
+        restored = {r["id"]: (r["name"], r["amount"])
+                    for r in t.read().collect()}
+
+        expected = {i: (f"n{i}", float(i)) for i in range(2000)}
+        for i in range(10):
+            expected[i] = (f"n{i}", i + 1e6 + 1)
+        for i in range(10, 100):
+            expected[i] = (f"n{i}", float(i + 1))
+        for i in range(500, 600):
+            expected[i] = (f"r{i}", 7.0)
+        for i in range(1900, 2000):
+            del expected[i]
+        expected.update({i: (f"new{i}", float(i)) for i in range(2000, 2010)})
+        expected.update({i: (f"a{i}", float(i)) for i in range(3000, 3100)})
+        assert final == expected
+        assert n_read == 50
+        assert restored == {i: (f"n{i}", float(i)) for i in range(2000)}
+        assert jobs == self.JOBS

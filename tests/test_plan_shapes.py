@@ -688,7 +688,7 @@ class TestRound7bLakehousePlans:
 
         t = self._table(spark, tmp_path)
         m = t._manifest(0)
-        live = t._scan(m["files"], [], False, 0)
+        live = t._scan(m, m["files"])
         detection = live.filter(F.col("id") < 10).select("_file").distinct()
         plan = plan_of(detection)
         mm = re.search(r"ReadSchema: struct<([^>]*)>", plan)
@@ -709,7 +709,7 @@ class TestRound7bLakehousePlans:
 
         t = self._table(spark, tmp_path)
         m = t._manifest(0)
-        live = t._scan(m["files"], [], False, 0)
+        live = t._scan(m, m["files"])
         keys = spark.createDataFrame([(1,)], "id bigint")
         detection = (
             live.join(F.broadcast(keys), ["id"], "anti")

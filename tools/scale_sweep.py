@@ -89,8 +89,8 @@ DEFAULT_QUERIES = [
 
 def _child(name: str, sf_dir: str, runs: int) -> None:
     """Measure ONE query in this (fresh) process; print JSON samples."""
+    from bench import cold_samples
     from hbase_to_mongo_export_spark import queries as registry
-    from hbase_to_mongo_export_spark.operators import _cache as op_cache
     from hbase_to_mongo_export_spark.session import get_spark
 
     spark = get_spark("scale_sweep_child")
@@ -99,19 +99,8 @@ def _child(name: str, sf_dir: str, runs: int) -> None:
     # demo queries (CLI-runnable, un-oracled scale variants like the
     # max_df-capped tfidf) are sweepable too
     fn = {**registry.queries(), **registry.demo_queries()}[name]
-
-    def run() -> None:
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    run()  # warm-up: codegen + file listing (JVM startup excluded too)
-    op_cache.release_all()
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        run()
-        samples.append(round(time.perf_counter() - t0, 3))
-        op_cache.release_all()
-    print("SWEEP_RESULT " + json.dumps(samples))
+    samples = cold_samples(lambda: fn(spark, sf_dir), runs)
+    print("SWEEP_RESULT " + json.dumps([round(t, 3) for t in samples]))
     spark.stop()
 
 

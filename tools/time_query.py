@@ -11,12 +11,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import cold_samples  # noqa: E402
 from hbase_to_mongo_export_spark import queries as registry  # noqa: E402
-from hbase_to_mongo_export_spark.operators import _cache as op_cache  # noqa: E402
 from hbase_to_mongo_export_spark.session import get_spark  # noqa: E402
 
 
@@ -28,21 +27,10 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
     qmap = registry.queries()
 
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
     out = {}
     for name in names:
         fn = qmap[name]
-        run(fn(spark, sf_dir))
-        op_cache.release_all()
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-            op_cache.release_all()
-        samples.sort()
+        samples = sorted(cold_samples(lambda: fn(spark, sf_dir)))
         out[name] = {
             "median": round(samples[1], 3),
             "min": round(samples[0], 3),
