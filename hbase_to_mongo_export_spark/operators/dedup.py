@@ -239,20 +239,6 @@ def _to_signed(x: int) -> int:
     return x - 2**64 if x >= 2**63 else x
 
 
-def minhash_from_hashes(hashes: Column, num_hashes: int = 64) -> Column:
-    sentinel = F.lit(2**63 - 1).cast("long")
-    mins = [
-        F.coalesce(
-            F.array_min(
-                F.transform(hashes, lambda h: h.bitwiseXOR(F.lit(m).cast("long")))
-            ),
-            sentinel,
-        )
-        for m in _xor_params(num_hashes)
-    ]
-    return F.array(*mins)
-
-
 def _minhash_sig_cols(
     df: DataFrame,
     id_col: str,
@@ -358,9 +344,7 @@ def minhash_lsh_pairs(
     # re-hashing every shingle per join side; the signature frame is
     # num_hashes longs per document, far smaller than the shingle stream
     # it derives from
-    sig = _cache.track(
-        _minhash_sig_cols(df, id_col, text_col, n, num_hashes, hash_fn).cache()
-    )
+    sig = _cache.reuse(_minhash_sig_cols(df, id_col, text_col, n, num_hashes, hash_fn))
     candidates = _lsh_candidates(sig, id_col, num_hashes, bands, hash_fn)
 
     # hint("merge"): the shingle side is corpus-sized — never a broadcast
@@ -430,7 +414,7 @@ def simhash_pairs(
     # sides): one (id, long) row per doc, so the cache is node-scale
     # while the recompute it removes is the corpus tokenize + 64-vote
     # aggregate.
-    sigs = _cache.track(simhash(df, id_col, text_col, hash_fn=hash_fn).cache())
+    sigs = _cache.reuse(simhash(df, id_col, text_col, hash_fn=hash_fn))
     chunk_bits = 64 // bands
     chunked = sigs.select(
         id_col,
@@ -548,9 +532,7 @@ def winnow_overlap_pairs(
     splits them."""
     # fps feeds three consumers (per-doc counts + both join sides) —
     # materialize once instead of re-fingerprinting per branch
-    fps = _cache.track(
-        winnow_fingerprints(df, id_col, text_col, k, window, hash_fn).cache()
-    )
+    fps = _cache.reuse(winnow_fingerprints(df, id_col, text_col, k, window, hash_fn))
     counts = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     # hint("merge"): the fingerprint table self-join is corpus-sized on
     # both sides (SCALE_EVIDENCE.md §1).
@@ -603,9 +585,7 @@ def minhash_estimate_pairs(
     looking at exactly this error distribution on a sample."""
     # sig feeds three consumers (banding + both estimate join sides) —
     # materialize once instead of re-hashing every shingle per branch
-    sig = _cache.track(
-        _minhash_sig_cols(df, id_col, text_col, n, num_hashes, hash_fn).cache()
-    )
+    sig = _cache.reuse(_minhash_sig_cols(df, id_col, text_col, n, num_hashes, hash_fn))
     candidates = _lsh_candidates(sig, id_col, num_hashes, bands, hash_fn)
     matches = F.expr(
         " + ".join(
@@ -674,8 +654,8 @@ def connected_components(
     Scale posture: each round is one shuffle of the (undirected) edge
     list keyed by node id — the same key every round, so at cluster
     scale a pre-`repartition` on id keeps rounds co-partitioned. Labels
-    are cached per round and the previous round unpersisted; lineage is
-    cut so 25 rounds don't build a 25-deep plan.
+    are checkpointed per round and the previous round released; lineage
+    is cut so 25 rounds don't build a 25-deep plan.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -683,8 +663,7 @@ def connected_components(
         node_df = und.select(F.col("u").alias("id")).distinct()
     else:
         node_df = nodes.select(F.col(nodes.columns[0]).alias("id")).distinct()
-    labels = node_df.withColumn("component", F.col("id"))
-    labels.cache()
+    labels = _cache.reuse(node_df.withColumn("component", F.col("id")))
     from pyspark.sql import Observation
 
     for _ in range(max_iter):
@@ -719,9 +698,9 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = _cache.checkpoint(new_labels)
         changed = int(obs.get["n_changed"])
-        labels.unpersist()
+        _cache.release(labels)
         labels = new_labels
         if changed == 0:
             break

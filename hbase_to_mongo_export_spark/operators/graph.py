@@ -42,34 +42,40 @@ def pagerank(
     Scale posture: each round is one shuffle — the contribution aggregate
     keyed by destination; the degree table rides along pre-joined. The
     same key partitions every round, so at cluster scale a persisted
-    pre-partitioned edge list makes rounds co-partitioned. Plan depth
-    grows linearly with iterations; for tens of rounds insert
-    localCheckpoint every ~10 to cut lineage (components does this) —
-    at 5 rounds the straight-line plan is cheaper.
+    pre-partitioned edge list makes rounds co-partitioned. Each round's
+    rank vector is checkpointed, which cuts lineage, and the previous
+    round's is released.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     und = e.union(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct()
-    deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    # loop invariants: every round re-reads the edge list and node set, so
-    # materialize them once instead of recomputing the distinct per round
-    und_deg = _cache.track(und.join(deg, "u").cache())
-    nodes = _cache.track(
-        und.select(F.col("u").alias("node")).distinct().cache()
-    )
-    n = nodes.count()  # one scalar action; also materializes the caches' input
-    base = (SCALE * 15) // (DAMPING_DEN * n)
+    # deg has one row per node, so it is the node set: one checkpoint
+    # pass materializes it and counts n as an Observation metric
+    from pyspark.sql import Observation
 
-    r = nodes.withColumn("rank", F.lit(SCALE // n).cast("long"))
+    obs = Observation()
+    deg = _cache.checkpoint(
+        und.groupBy("u")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+    )
+    n = int(obs.get["n"])
+    base = (SCALE * 15) // (DAMPING_DEN * n)
+    # loop invariant: every round re-reads the degree-annotated edge list
+    und_deg = _cache.reuse(und.join(deg, "u"))
+
+    r = deg.select(
+        F.col("u").alias("node"), F.lit(SCALE // n).cast("long").alias("rank")
+    )
     for _ in range(iterations):
-        # no nodes re-join: und is SYMMETRIC, so distinct(v) == distinct(u)
-        # == the node set — every node receives at least one contribution
-        # (its neighbors all carry a rank), so the per-round
-        # left-join-back onto `nodes` was a no-op join costing one
+        # no node-set re-join: und is SYMMETRIC, so distinct(v) ==
+        # distinct(u) == the node set — every node receives at least one
+        # contribution (its neighbors all carry a rank), so a per-round
+        # left-join-back onto the nodes would be a no-op join costing one
         # node-scale exchange per round (guide §2.4). COALESCE(s, 0) is
         # likewise dead: a SUM group is never NULL.
-        r = (
+        nxt = (
             und_deg.join(r, und_deg.u == r.node)
             .select(
                 F.col("v"),
@@ -90,7 +96,9 @@ def pagerank(
         # at 5 rounds in isolated sessions, and 2× under load); the
         # checkpoint is the same iterative-state hygiene
         # connected_components uses and holds only (node, rank) rows
-        r = r.localCheckpoint(eager=True)
+        nxt = _cache.checkpoint(nxt)
+        _cache.release(r)
+        r = nxt
     return r.select("node", F.col("rank").alias("rank_scaled"))
 
 
@@ -133,15 +141,14 @@ def label_propagation(
     unroll the iterations. One count-aggregate + one window per round —
     the Pregel-lite shape shared with connected_components.
 
-    Materialization note: each round eagerly ``localCheckpoint``s the
-    node-sized label map (so building the returned DataFrame runs Spark
-    jobs, and the checkpointed partitions are executor-resident with no
-    lineage fallback — an executor loss mid-query recomputes nothing and
-    fails the job; acceptable for node-sized state, and `spark.cleaner`
-    frees each round's blocks once the previous round's DataFrame is
-    garbage-collected on the driver). For cluster-scale fault tolerance
-    of a huge label map, swap the localCheckpoint for a reliable
-    ``checkpoint()`` under ``spark.sparkContext.setCheckpointDir``."""
+    Materialization note: each round eagerly checkpoints the node-sized
+    label map (so building the returned DataFrame runs Spark jobs, and
+    the checkpointed partitions are executor-resident with no lineage
+    fallback — an executor loss mid-query recomputes nothing and fails
+    the job; acceptable for node-sized state) and then releases the
+    previous round's blocks. For cluster-scale fault tolerance of a huge
+    label map, swap the local checkpoint for a reliable ``checkpoint()``
+    under ``spark.sparkContext.setCheckpointDir``."""
     from pyspark.sql import Window
 
     sym = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
@@ -160,7 +167,7 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("node", F.col("label").alias("new_label"))
         )
-        cur = (
+        nxt = (
             cur.join(picked, "node", "left")
             .select(
                 "node",
@@ -172,7 +179,9 @@ def label_propagation(
         # runs 2^(rounds-r) times and the lazily nested plan grows per
         # round (the pagerank lesson, guide §1.2/§5). The label map is
         # node-sized.
-        cur = cur.localCheckpoint(eager=True)
+        nxt = _cache.checkpoint(nxt)
+        _cache.release(cur)
+        cur = nxt
     return cur
 
 
@@ -203,9 +212,8 @@ def bfs_hops(
         from pyspark.sql import Observation
 
         obs = Observation()
-        new = new.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
+        # no early release: the lazy `dist` union reads every hop
+        new = _cache.checkpoint(new.observe(obs, F.count(F.lit(1)).alias("n")))
         if int(obs.get["n"]) == 0:
             break
         dist = dist.unionByName(new)
@@ -238,7 +246,7 @@ def connected_components_two_phase(
 
     Scale posture: each phase is one groupBy(node) shuffle over the
     current edge set plus a distinct; the edge set only shrinks toward
-    one star edge per node. localCheckpoint per round cuts lineage; the
+    one star edge per node. A checkpoint per round cuts lineage; the
     convergence probe rides the checkpoint as Observation metrics —
     equal row count AND equal order-independent XOR fold of
     xxhash64(u, v) between consecutive (distinct) edge sets declares
@@ -261,11 +269,13 @@ def connected_components_two_phase(
     from pyspark.sql import Observation
 
     _obs0 = Observation()
-    e = e.observe(
-        _obs0,
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-    ).localCheckpoint(eager=True)
+    e = _cache.checkpoint(
+        e.observe(
+            _obs0,
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
+        )
+    )
     _v0 = _obs0.get
     prev_count, prev_hash = int(_v0["n"]), _v0["h"]
 
@@ -327,7 +337,9 @@ def connected_components_two_phase(
                 F.count(F.lit(1)).alias("n"),
                 F.bit_xor(F.xxhash64("u", "v")).alias("h"),
             )
-        return sym.localCheckpoint(eager=True)
+        nxt = _cache.checkpoint(sym)
+        _cache.release(cur)
+        return nxt
 
     for _ in range(max_iter):
         e = _phase(e, large=True)
@@ -385,7 +397,7 @@ def fm_neighborhood_function(
     # edge-scale side of all ``hops`` joins exchange-free (guide §2.4 —
     # one repartition paid once replaces a corpus-scale shuffle per hop;
     # only the node-sized sketch side still moves)
-    sym = _cache.track(sym.repartition("v").cache())
+    sym = _cache.reuse(sym.repartition("v"))
     nodes = sym.select(F.col("u").alias("id")).distinct()
 
     def bit_expr(t: int) -> str:
@@ -411,13 +423,15 @@ def fm_neighborhood_function(
         from pyspark.sql import Observation
 
         obs = Observation()
-        s = s.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.sum(F.expr(f"cast({_rv} as bigint)"))
-            .cast("bigint")
-            .alias("sum_r2"),
-        ).localCheckpoint(eager=True)
+        s = _cache.checkpoint(
+            s.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_nodes"),
+                F.sum(F.expr(f"cast({_rv} as bigint)"))
+                .cast("bigint")
+                .alias("sum_r2"),
+            )
+        )
         got = obs.get
         return s, (hop, got["n_nodes"], got["sum_r2"])
 
@@ -438,7 +452,7 @@ def fm_neighborhood_function(
                 ]
             )
         )
-        sk = (
+        nxt = (
             sk.join(nb, sk.id == nb.u, "left")
             .select(
                 "id",
@@ -452,7 +466,9 @@ def fm_neighborhood_function(
                 ],
             )
         )
-        sk, row_h = _ckpt_with_stats(sk, h)
+        nxt, row_h = _ckpt_with_stats(nxt, h)
+        _cache.release(sk)
+        sk = nxt
         out_rows.append(row_h)
 
     spark = edges.sparkSession

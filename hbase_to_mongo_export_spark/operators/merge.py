@@ -2566,10 +2566,8 @@ class ParquetMergeTable:
             from pyspark.sql import Observation
 
             obs = Observation()
-            victims = (
-                live.filter(condition)
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
+            victims = _op_cache.checkpoint(
+                live.filter(condition).observe(obs, F.count(F.lit(1)).alias("n"))
             )
             n_victims = stats["rows_deleted"] = int(obs.get["n"])
             if n_victims:
@@ -2592,6 +2590,7 @@ class ParquetMergeTable:
                 dels = dels + _parquet_parts(entry_path)
                 change_files = _parquet_parts(change_path)
                 stats["delete_files_total"] = len(dels)
+            _op_cache.release(victims)
         stats["version"] = self._commit(
             m, m["files"], "delete", stats,
             delete_files=dels, change_files=change_files,
@@ -3051,12 +3050,10 @@ class ParquetMergeTable:
             # §1.2 step 1 / §5: reuse beats recompute when the reused
             # frame is delta-proportional, which the touched set is by
             # construction). The consumers are SEQUENTIAL actions, so a
-            # lazy persist is populated by the first one (the rewrite
-            # write) with no extra materialization job; unpersisted
-            # after the commit below.
-            joined = _op_cache.track(
-                tgt.join(src_side, join_cond, "left").persist()
-            )
+            # lazy cache is populated by the first one (the rewrite
+            # write) with no extra materialization job; released after
+            # the commit below.
+            joined = _op_cache.reuse(tgt.join(src_side, join_cond, "left"))
             matched = F.col("_src__matched").isNotNull()
             # delete clause under SQL three-valued logic: a condition
             # evaluating to NULL must NOT fire (otherwise the row would
@@ -3308,8 +3305,8 @@ class ParquetMergeTable:
             schema_json=_schema_json_of(out_schema),
         )
         if touched:
-            # prompt release (tracked as a safety net for error paths)
-            joined.unpersist()
+            # prompt release (registered as a safety net for error paths)
+            _op_cache.release(joined)
         return stats
 
     def overwrite_where(
@@ -3470,15 +3467,14 @@ class ParquetMergeTable:
             # computed once: the rewrite write and the CDF pre/post
             # extracts below otherwise each re-scan the touched files
             # (two scans per UPDATE); the consumers are sequential
-            # actions, so a lazy persist is populated by the first (the
+            # actions, so a lazy cache is populated by the first (the
             # rewrite write) with no extra materialization job. The
             # frame is touched-file-sized — proportional to the
-            # update's footprint, not the table. Unpersisted at return;
-            # tracked as a safety net for error paths.
-            tgt = _op_cache.track(
+            # update's footprint, not the table. Released at return;
+            # registered as a safety net for error paths.
+            tgt = _op_cache.reuse(
                 self._scan(m, touched, schema=full_schema)
                 .select(*target_cols)
-                .persist()
             )
 
             col_types = {f.name: f.dataType for f in full_schema.fields}
@@ -3548,7 +3544,7 @@ class ParquetMergeTable:
             txn=txn,
         )
         if touched:
-            tgt.unpersist()
+            _op_cache.release(tgt)
         return stats
 
     def clone(
@@ -4222,7 +4218,7 @@ class ParquetMergeTable:
         # materialize once, size the final change files from the exact
         # materialized count (the delete_where pattern) — a restore that
         # flips a large fraction of the table never funnels through one
-        # task. localCheckpoint replaces the old scratch-parquet round
+        # task. A checkpoint replaces the old scratch-parquet round
         # trip (one write + three re-reads of the same diff rows), and
         # the per-type counts ride the SAME pass as Observation metrics
         # (the old post-checkpoint groupBy+collect was a second job per
@@ -4230,21 +4226,19 @@ class ParquetMergeTable:
         from pyspark.sql import Observation
 
         obs = Observation()
-        staged = diff.observe(
-            obs,
-            F.coalesce(
-                F.sum(
-                    F.when(F.col(CHANGE_TYPE) == "delete", 1).otherwise(0)
-                ),
-                F.lit(0),
-            ).alias("n_del"),
-            F.coalesce(
-                F.sum(
-                    F.when(F.col(CHANGE_TYPE) == "insert", 1).otherwise(0)
-                ),
-                F.lit(0),
-            ).alias("n_ins"),
-        ).localCheckpoint(eager=True)
+        staged = _op_cache.checkpoint(
+            diff.observe(
+                obs,
+                F.coalesce(
+                    F.sum(F.when(F.col(CHANGE_TYPE) == "delete", 1).otherwise(0)),
+                    F.lit(0),
+                ).alias("n_del"),
+                F.coalesce(
+                    F.sum(F.when(F.col(CHANGE_TYPE) == "insert", 1).otherwise(0)),
+                    F.lit(0),
+                ).alias("n_ins"),
+            )
+        )
         got = obs.get
         n_del = int(got["n_del"])
         n_ins = int(got["n_ins"])
@@ -4269,6 +4263,7 @@ class ParquetMergeTable:
             chg_dir = self._change_dir()
             staged.coalesce(n_parts).write.mode("overwrite").parquet(chg_dir)
             change_files = _parquet_parts(chg_dir)
+        _op_cache.release(staged)
 
         stats = {
             "restored_version": version,
@@ -4618,18 +4613,15 @@ def stream_apply_changes(
         from pyspark.sql import Observation
 
         obs = Observation()
-        latest = (
+        latest = _op_cache.checkpoint(
             latest.observe(
                 obs,
                 F.coalesce(
-                    F.sum(
-                        F.when(F.col("_cdf_ct") == "delete", 1).otherwise(0)
-                    ),
+                    F.sum(F.when(F.col("_cdf_ct") == "delete", 1).otherwise(0)),
                     F.lit(0),
                 ).alias("n_del"),
                 F.count(F.lit(1)).alias("n_all"),
             )
-            .localCheckpoint(eager=True)
         )
         got = obs.get
         n_del = int(got["n_del"])
@@ -4656,6 +4648,7 @@ def stream_apply_changes(
                 insert_not_matched=False,
                 schema_evolution=True,
             )
+        _op_cache.release(latest)
 
     return (
         changes.writeStream.foreachBatch(_apply)

@@ -474,9 +474,9 @@ def tfidf_cosine_pairs(
     )
     # the weight table feeds three consumers (norms + both join sides);
     # materialize it once instead of re-running tokenize+tf+idf per branch.
-    # Tracked so session owners can unpersist after the consuming action
+    # Registered so the query's owner releases it after the consuming action
     # (see operators/_cache.py).
-    weights = _cache.track(weights.cache())
+    weights = _cache.reuse(weights)
     norms = weights.groupBy(id_col).agg(
         F.sum(F.col("w") * F.col("w")).alias("norm_sq")
     )

@@ -12,7 +12,7 @@ everything else is whole-stage-codegen column work.
 
 The prefix up to sanitise is one tagged frame (record columns plus
 ``error``); records and quarantine are filters of it. ``run_export``
-persists it once, so each (nondeterministic) UDF runs once per row.
+caches it once, so each (nondeterministic) UDF runs once per row.
 """
 
 from __future__ import annotations
@@ -178,25 +178,19 @@ def run_export(
         if status_store is not None:
             status_store.set_status(correlation_id, collection, status, files)
 
+    from ..operators import _cache as op_cache
     from ..sources.catalog import TableUnavailableError
 
+    tagged = None
     try:
         # `source` may be a DataFrame or a zero-arg loader (the loader form
         # lets a missing table surface here and fold to Table_Unavailable)
         if callable(source):
             source = source()
-        tagged = _tagged(source, cfg)
-    except env.BlockedTopicError:
-        set_status("Blocked_Topic")
-        return ExportResult(cfg.topic, "Blocked_Topic", 0, 0, [], [])
-    except TableUnavailableError:
-        set_status("Table_Unavailable")
-        return ExportResult(cfg.topic, "Table_Unavailable", 0, 0, [], [])
-
-    set_status("Exporting")
-    try:
         # The export's one materialization: every job below reads it.
-        records, quarantine = _split(tagged.persist())
+        tagged = op_cache.reuse(_tagged(source, cfg))
+        set_status("Exporting")
+        records, quarantine = _split(tagged)
         written = sink.write_snapshot(records, cfg)
         n_quarantined = quarantine.count()
         if status_store is not None:
@@ -224,15 +218,20 @@ def run_export(
                 "uncompressed_bytes": written.uncompressed_bytes,
             },
         )
+    except env.BlockedTopicError:
+        set_status("Blocked_Topic")
+        return ExportResult(cfg.topic, "Blocked_Topic", 0, 0, [], [])
     except Exception as e:
-        # A missing source table is NOT a generic failure: the reference
-        # distinguishes TableNotFoundException and records Table_Unavailable
-        # (JobCompletionNotificationListener.kt:69-91); Spark surfaces the
-        # same condition lazily as AnalysisException PATH_NOT_FOUND /
+        # One failure path for building the tagged frame and for every
+        # action on it. A missing source table is NOT a generic failure:
+        # the reference distinguishes TableNotFoundException and records
+        # Table_Unavailable (JobCompletionNotificationListener.kt:69-91);
+        # the loader raises it eagerly, and Spark surfaces the same
+        # condition lazily as AnalysisException PATH_NOT_FOUND /
         # TABLE_OR_VIEW_NOT_FOUND when the action runs.
         unavailable = isinstance(e, TableUnavailableError) or (
-            getattr(e, "getErrorClass", None) is not None
-            and (e.getErrorClass() or "")
+            getattr(e, "getCondition", None) is not None
+            and (e.getCondition() or "")
             in ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND")
         )
         status = "Table_Unavailable" if unavailable else "Export_Failed"
@@ -244,4 +243,4 @@ def run_export(
             cfg.topic, status, 0, 0, [], [], error=f"{type(e).__name__}: {e}"
         )
     finally:
-        tagged.unpersist()
+        op_cache.release(tagged)

@@ -99,25 +99,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _mat(df: DataFrame) -> DataFrame:
-    """Materialize a REUSED intermediate once per query run.
-
-    Spark performs no common-subexpression elimination across DataFrame
-    branches: a subplan referenced by k consumers inside one action is
-    recomputed k times (ransac_line_fit re-ran its join+aggregate point
-    set FOUR times; matrix_profile re-ran the daily series six times —
-    guide §1.2 step 1: don't compute things you throw away). An eager
-    ``localCheckpoint`` computes the subplan exactly once and replaces
-    it with its materialized partitions, which also truncates lineage
-    for iterative plans. This is per-run, in-query materialization —
-    it lives and dies inside a single bench/oracle invocation (the next
-    run rebuilds it from the parquet inputs), so it is reuse WITHIN one
-    computation, not caching across runs. Only small, bounded frames
-    (aggregates, per-group summaries) go through here; corpus-scale
-    frames stay streamed."""
-    return df.localCheckpoint(eager=True)
-
-
 # ---------------------------------------------------------------------------
 # Relational core (SURVEY §2.8 — supplied by Spark, verified vs DuckDB)
 # ---------------------------------------------------------------------------
@@ -3102,7 +3083,6 @@ _SIN7 = (
 
 
 __all__ = [
-    '_mat',
     'Callable',
     'Iterator',
     'pd',

@@ -425,7 +425,7 @@ def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count); materialize only its (keep_id, n_copies) projection — the
     # heavy `norm` group key stays out of the materialized frame, and
     # the tokenize+hash-agg pass runs once instead of twice
-    canon = _mat(
+    canon = op_cache.checkpoint(
         base.groupBy("norm").agg(
             F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
@@ -734,7 +734,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             "f"
         ),
     ).agg(F.count(F.lit(1)).alias("n"))
-    feat = op_cache.track(feat.cache())
+    feat = op_cache.reuse(feat)
     ct = (
         feat.filter(F.col("lang") == "en")
         .groupBy("f")
@@ -853,7 +853,7 @@ def source_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    grams = op_cache.track(grams.cache())
+    grams = op_cache.reuse(grams)
     totals = grams.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = grams.select(F.col("source").alias("src_a"), "g")
     b = grams.select(F.col("source").alias("src_b"), F.col("g").alias("gb"))
@@ -984,7 +984,7 @@ def theil_inequality_decomposition(spark: SparkSession, sf_dir: str) -> DataFram
     # per_region (5 rows) feeds the grand-total aggregate AND the
     # per-region term projection — materialize once so the per-customer
     # hash-agg + dimension joins run a single time per invocation
-    per_region = _mat(per_region)
+    per_region = op_cache.checkpoint(per_region)
     fold_by_rg = lambda colname: F.aggregate(  # noqa: E731
         F.transform(
             F.array_sort(F.collect_list(F.struct("rg", F.col(colname)))),

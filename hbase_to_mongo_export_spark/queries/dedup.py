@@ -124,7 +124,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on a gate-sized graph
     with _scoped_shuffle_partitions(spark, 32):
         comp = dedup_mod.connected_components(pairs, "id_a", "id_b")
-        comp = comp.localCheckpoint(eager=True)
+        comp = op_cache.checkpoint(comp)
     return (
         comp.groupBy("component")
         .agg(F.count(F.lit(1)).alias("size"))
@@ -713,8 +713,8 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cached; each sweep point re-bands the cached table, so the
     corpus-scale shingle hashing runs once regardless of sweep width."""
     docs = _t(spark, sf_dir, "documents")
-    sig = op_cache.track(
-        dedup_mod._minhash_sig_cols(docs, "doc_id", "text", 3, 64, "md5").cache()
+    sig = op_cache.reuse(
+        dedup_mod._minhash_sig_cols(docs, "doc_id", "text", 3, 64, "md5")
     )
     outs = []
     for b in (8, 16, 32):
@@ -746,12 +746,12 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count); without materialization the whole inverted-index self-join
     # and the whole banded LSH pipeline would run twice (guide §1.2 —
     # Spark does no cross-branch CSE). The pair frames are node-scale.
-    exact = _mat(
+    exact = op_cache.checkpoint(
         dedup_mod.ngram_jaccard_pairs(
             docs, "doc_id", "text", n=3, threshold=0.2, block_col="lang"
         ).select("id_a", "id_b")
     )
-    lsh = _mat(
+    lsh = op_cache.checkpoint(
         dedup_mod.minhash_lsh_pairs(
             docs, "doc_id", "text", n=3, num_hashes=64, bands=16,
             threshold=0.2, hash_fn="md5",
@@ -844,7 +844,7 @@ def dedup_incremental_index_update(spark: SparkSession, sf_dir: str) -> DataFram
     # signature table (doc_id + 64 ints, node-scale) so the corpus
     # tokenize+hash pass runs once, the same pattern minhash_lsh_pairs
     # uses (guide §1.2).
-    sig = op_cache.track(sig_base.unionByName(sig_delta).cache())
+    sig = op_cache.reuse(sig_base.unionByName(sig_delta))
     candidates = _lsh_candidates(sig, "doc_id", 64, 16, "md5")
     sh = docs.select(
         F.col("doc_id"), word_shingles(F.col("text"), 3).alias("sh")
@@ -887,8 +887,8 @@ def dedup_lexical_semantic_agreement(spark: SparkSession, sf_dir: str) -> DataFr
     sem = sim_mod.embedding_near_dup_pairs(emb, dim=dim, threshold=0.2).select(
         F.col("id_a").alias("sa"), F.col("id_b").alias("sb")
     )
-    lex = op_cache.track(lex.cache())
-    sem = op_cache.track(sem.cache())
+    lex = op_cache.reuse(lex)
+    sem = op_cache.reuse(sem)
     both = lex.join(
         sem, (F.col("id_a") == F.col("sa")) & (F.col("id_b") == F.col("sb"))
     )
@@ -972,7 +972,7 @@ def substring_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sh = op_cache.track(sh.cache())
+    sh = op_cache.reuse(sh)
     a = sh.alias("a")
     b = sh.alias("b")
     return (

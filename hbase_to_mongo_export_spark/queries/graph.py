@@ -162,7 +162,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # e is vertex-sized (≤ 3|V| edges) and feeds four consumers (three
     # triangle-join sides + the edge count) — materialize once instead of
     # re-running the corpus-scale co-order join per consumer
-    e = op_cache.track(graph_mod.top_k_cooccurrence_edges(w, k=3).cache())
+    e = op_cache.reuse(graph_mod.top_k_cooccurrence_edges(w, k=3))
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.u") == F.col("e1.v"))
@@ -234,9 +234,7 @@ def graph_label_propagation_communities(spark: SparkSession, sf_dir: str) -> Dat
         F.col("l_suppkey").alias("s"), F.col("l_orderkey").alias("o")
     ).distinct()
     pairs = _so_pairs(so)
-    edges = op_cache.track(
-        graph_mod.top_k_cooccurrence_edges(pairs, k=3).cache()
-    )
+    edges = op_cache.reuse(graph_mod.top_k_cooccurrence_edges(pairs, k=3))
     labels = sup.select(
         F.col("s_suppkey").alias("node"),
         F.col("s_nationkey").cast("bigint").alias("label"),
@@ -278,7 +276,7 @@ def graph_bfs_hop_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").alias("s"), F.col("l_orderkey").alias("o")
     ).distinct()
     pairs = _so_pairs(so)
-    edges = op_cache.track(graph_mod.top_k_cooccurrence_edges(pairs, k=3).cache())
+    edges = op_cache.reuse(graph_mod.top_k_cooccurrence_edges(pairs, k=3))
     source = edges.agg(F.min("u")).first()[0]
     dist = graph_mod.bfs_hops(edges, source=int(source), max_hops=4)
     return (
@@ -336,7 +334,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     w = _so_pairs(so)
     # Iterative-algorithm hygiene (same pattern as connected_components):
-    # the edge list is localCheckpoint'ed ONCE into a LogicalRDD leaf and
+    # the edge list is checkpointed ONCE into a LogicalRDD leaf and
     # every round's survivor set is checkpoint'ed too — checkpoints
     # truncate LINEAGE, not just execution (a cache alone leaves every
     # prior round inside the logical plan, whose tree — and explain
@@ -352,9 +350,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     k, rounds = 3, 4
     stats: list[tuple[int, int, int]] = []
     with _scoped_shuffle_partitions(spark, 8):
-        e = graph_mod.top_k_cooccurrence_edges(w, k=3).localCheckpoint(
-            eager=True
-        )
+        e = op_cache.checkpoint(graph_mod.top_k_cooccurrence_edges(w, k=3))
         cur_edges = e
         for r in range(rounds + 1):
             # ONE degree aggregate per round: deg previously fed two
@@ -372,7 +368,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             from pyspark.sql import Observation
 
             obs = Observation()
-            deg = (
+            nxt = op_cache.checkpoint(
                 cur_edges.select(F.col("u").alias("node"))
                 .unionAll(cur_edges.select(F.col("v").alias("node")))
                 .groupBy("node")
@@ -382,8 +378,10 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.count(F.lit(1)).alias("n"),
                     F.coalesce(F.expr("sum(deg) div 2"), F.lit(0)).alias("m"),
                 )
-                .localCheckpoint(eager=True)
             )
+            if r:  # the previous round's degrees fed only this one
+                op_cache.release(deg)
+            deg = nxt
             row = obs.get
             stats.append((r, int(row["n"]), int(row["m"])))
             if r == rounds:
@@ -437,7 +435,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").alias("s"), F.col("l_orderkey").alias("o")
     ).distinct()
     w = _so_pairs(so)
-    e = op_cache.track(graph_mod.top_k_cooccurrence_edges(w, k=3).cache())
+    e = op_cache.reuse(graph_mod.top_k_cooccurrence_edges(w, k=3))
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -534,7 +532,7 @@ def graph_cc_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with _scoped_shuffle_partitions(spark, 32):
         comp = graph_mod.connected_components_two_phase(pairs, "id_a", "id_b")
-        comp = comp.localCheckpoint(eager=True)
+        comp = op_cache.checkpoint(comp)
     return (
         comp.groupBy("component")
         .agg(F.count(F.lit(1)).alias("size"))
@@ -584,7 +582,7 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = ew.unionByName(
         ew.select(F.col("v").alias("u"), F.col("u").alias("v"), "wt")
     )
-    und = op_cache.track(und.cache())
+    und = op_cache.reuse(und)
     src = und.agg(F.min("u").alias("s")).collect()[0]["s"]
     dist = spark.createDataFrame([(int(src), 0)], "node long, dist long")
     for _ in range(4):
@@ -592,12 +590,11 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
             und.join(dist, und.u == dist.node)
             .select(F.col("v").alias("node"), (F.col("dist") + F.col("wt")).alias("dist"))
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
+        nxt = op_cache.checkpoint(
+            dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
         )
-        dist = dist.localCheckpoint(eager=True)
+        op_cache.release(dist)
+        dist = nxt
     wr = Window.orderBy("dist", "node")
     return (
         dist.withColumn("rn", F.row_number().over(wr))
@@ -634,7 +631,7 @@ def graph_deterministic_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("nbr"),
         (F.row_number().over(wadj) - 1).alias("idx"),
     )
-    adj = op_cache.track(adj.cache())
+    adj = op_cache.reuse(adj)
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     walks = deg.select(F.col("node").alias("start"), F.col("node").alias("cur"))
     for s in (1, 2, 3):
@@ -732,7 +729,7 @@ def graph_modularity_nation_partition(spark: SparkSession, sf_dir: str) -> DataF
             F.col("s_nationkey").alias("comm_v"),
         )
     )
-    e = op_cache.track(e.cache())
+    e = op_cache.reuse(e)
     m = e.count()
     within = (
         e.filter(F.col("comm_u") == F.col("comm_v"))
@@ -774,8 +771,7 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").alias("s"), F.col("l_orderkey").alias("o")
     ).distinct()
     wdf = _so_pairs(so)
-    e = graph_mod.top_k_cooccurrence_edges(wdf, k=3)
-    e = e.localCheckpoint(eager=True)
+    e = op_cache.checkpoint(graph_mod.top_k_cooccurrence_edges(wdf, k=3))
     n_initial = e.count()
     for _ in range(3):
         e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
@@ -813,8 +809,9 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
             .agg(F.count(F.col("t.a")).alias("s"))
         )
-        e = sup.filter(F.col("s") >= 1).select("u", "v")
-        e = e.localCheckpoint(eager=True)
+        nxt = op_cache.checkpoint(sup.filter(F.col("s") >= 1).select("u", "v"))
+        op_cache.release(e)
+        e = nxt
     nodes = (
         e.select("u")
         .unionAll(e.select(F.col("v").alias("u")))
@@ -845,8 +842,7 @@ def graph_densest_subgraph_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").alias("s"), F.col("l_orderkey").alias("o")
     ).distinct()
     wdf = _so_pairs(so)
-    e = graph_mod.top_k_cooccurrence_edges(wdf, k=3)
-    e = e.localCheckpoint(eager=True)
+    e = op_cache.checkpoint(graph_mod.top_k_cooccurrence_edges(wdf, k=3))
     rows = []
     for r in (1, 2, 3):
         n_edges = e.count()
@@ -856,19 +852,21 @@ def graph_densest_subgraph_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("s")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        deg = deg.localCheckpoint(eager=True)
+        deg = op_cache.checkpoint(deg)
         n_nodes = deg.count()
         rows.append((r, n_nodes, n_edges))
         sum_d = 2 * n_edges
         keep = deg.filter(
             10 * max(n_nodes, 1) * F.col("d") >= 11 * sum_d
         ).select("s")
-        e = (
+        nxt = op_cache.checkpoint(
             e.join(keep.withColumnRenamed("s", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("s", "v"), "v", "left_semi")
             .select("u", "v")
         )
-        e = e.localCheckpoint(eager=True)
+        op_cache.release(deg)
+        op_cache.release(e)
+        e = nxt
     # density rounds in Spark SQL (HALF_UP like DuckDB), not Python's
     # banker's round
     return (
@@ -942,7 +940,7 @@ def graph_local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").alias("s"), F.col("l_orderkey").alias("o")
     ).distinct()
     wdf = _so_pairs(so)
-    e = op_cache.track(graph_mod.top_k_cooccurrence_edges(wdf, k=3).cache())
+    e = op_cache.reuse(graph_mod.top_k_cooccurrence_edges(wdf, k=3))
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.u") == F.col("e1.v"))
@@ -1046,7 +1044,7 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    edges = op_cache.track(edges.cache())
+    edges = op_cache.reuse(edges)
     a1 = edges.groupBy("s").agg(F.sum("w").alias("a"))
     h1 = (
         edges.join(a1, "s")
@@ -1056,7 +1054,7 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a2 feeds TWO consumers (h2 and the authority top-10); materialize
     # it (node-scale) so the a1→h1→a2 join-aggregate chain over the
     # cached edge list runs once (guide §1.2).
-    a2 = _mat(
+    a2 = op_cache.checkpoint(
         edges.join(h1, "c")
         .groupBy("s")
         .agg(F.sum(F.col("w") * F.col("h")).alias("a"))
@@ -1165,11 +1163,11 @@ def graph_attack_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", "v")
         .distinct()
     )
-    edges = op_cache.track(edges.cache())
+    edges = op_cache.reuse(edges)
     und = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct()
-    und = op_cache.track(und.cache())
+    und = op_cache.reuse(und)
     deg = und.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -1183,7 +1181,7 @@ def graph_attack_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 10)
         .select("node")
     )
-    hubs = op_cache.track(hubs.cache())
+    hubs = op_cache.reuse(hubs)
     comp_before = dedup_mod.connected_components(
         edges.select(F.col("u").alias("id_a"), F.col("v").alias("id_b"))
     )

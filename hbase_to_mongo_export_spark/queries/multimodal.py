@@ -378,7 +378,7 @@ def multimodal_image_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     # Both sides of the pair join consume the dHash table; materialize
     # it (3 ints per image, node-scale) so the P6 decode+hash kernel
     # runs once instead of once per side (guide §1.2).
-    hashes = _mat(mm_mod.ppm_image_dhash(media))
+    hashes = op_cache.checkpoint(mm_mod.ppm_image_dhash(media))
     a = hashes.select(
         F.col("media_id").alias("ida"),
         F.col("dhash_hi").alias("ha"),

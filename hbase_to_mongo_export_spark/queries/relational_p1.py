@@ -5284,7 +5284,7 @@ def consistent_join_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     so = orders.join(
         F.broadcast(sc), orders.o_custkey == sc.c_custkey
     ).select("o_orderkey", "o_totalprice")
-    so = op_cache.track(so.cache())
+    so = op_cache.reuse(so)
     sl = li.join(
         so.select("o_orderkey"), li.l_orderkey == F.col("o_orderkey")
     ).select("l_extendedprice")

@@ -174,7 +174,7 @@ def hll_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs = ranked.groupBy("g", "bucket").agg(
         F.expr(f"MAX({rank_sql})").alias("mj")
     )
-    regs = op_cache.track(regs.cache())
+    regs = op_cache.reuse(regs)
     merged = regs.groupBy("bucket").agg(F.max("mj").alias("mj")).select(
         F.lit("union").alias("g"), "bucket", "mj"
     )
@@ -287,7 +287,7 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("yhat").isNotNull())
         .select("d", F.abs(F.col("rev") - F.col("yhat")).alias("r"))
     )
-    resid = op_cache.track(resid.cache())
+    resid = op_cache.reuse(resid)
     cut = F.lit("1997-01-01").cast("date")
     calib = resid.filter(F.col("d") < cut)
     n_cal = calib.count()
@@ -437,7 +437,7 @@ def bloom_semijoin_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.expr(f"{hx} & 8191").alias("bit"))
         .distinct()
     )
-    bits = op_cache.track(bits.cache())
+    bits = op_cache.reuse(bits)
     probe = orders.select("o_orderkey", F.col("o_custkey").alias("k"))
     probe_bits = probe.crossJoin(F.broadcast(js)).select(
         "o_orderkey", "k", F.expr(f"{hx} & 8191").alias("bit")
@@ -510,7 +510,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("s"),
         (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("e"),
     )
-    iv = op_cache.track(iv.cache())
+    iv = op_cache.reuse(iv)
     pts = iv.select(
         F.col("s").alias("t"), F.lit(1).alias("delta"), "event_id"
     ).unionByName(
@@ -520,7 +520,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t", F.desc("delta"), "event_id"
     ).rowsBetween(Window.unboundedPreceding, 0)
     swept = pts.select("t", F.sum("delta").over(wsweep).alias("load"))
-    swept = op_cache.track(swept.cache())
+    swept = op_cache.reuse(swept)
     peak = swept.agg(F.max("load").alias("p"))
     first = (
         swept.join(F.broadcast(peak), swept.load == F.col("p"))
@@ -584,7 +584,7 @@ def orders_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    daily = op_cache.track(daily.cache())
+    daily = op_cache.reuse(daily)
     wd = Window.orderBy("d")
     mr = daily.select(
         "n", F.abs(F.col("n") - F.lag("n").over(wd)).alias("rng")
@@ -741,7 +741,7 @@ def surprising_edges_null_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").alias("s"), F.col("l_orderkey").alias("o")
     ).distinct()
     w = _so_pairs(so, count_alias="obs")
-    w = op_cache.track(w.cache())
+    w = op_cache.reuse(w)
     deg = (
         w.select(F.col("u").alias("s"), "obs")
         .unionAll(w.select(F.col("v").alias("s"), "obs"))
@@ -966,7 +966,7 @@ def matrix_profile_weekly_motif(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lag-product join; wv and pairs fan out further. Materializing the
     # three reused frames makes the orders scan+daily agg run ONCE per
     # invocation instead of six times (guide §1.2 step 1).
-    ser = _mat(
+    ser = op_cache.checkpoint(
         cal.join(cnt, "day", "left")
         .select("t", F.coalesce("c", F.lit(0)).alias("x"))
     )
@@ -977,7 +977,7 @@ def matrix_profile_weekly_motif(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).over(w7).alias("s2"),
         F.count(F.lit(1)).over(w7).alias("m"),
     )
-    wv = _mat(
+    wv = op_cache.checkpoint(
         win.filter(
             (F.col("m") == 7) & (7 * F.col("s2") - F.col("s") * F.col("s") > 0)
         ).select("i", "s", "s2")
@@ -1031,7 +1031,7 @@ def matrix_profile_weekly_motif(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dist"),
         )
     )
-    pairs = _mat(pairs)  # reused by motif AND the discord nn aggregate
+    pairs = op_cache.checkpoint(pairs)  # reused by motif AND the discord nn aggregate
     motif = pairs.orderBy("dist", "i", "j").limit(1)
     nn = (
         pairs.select(F.col("i").alias("k"), "dist")

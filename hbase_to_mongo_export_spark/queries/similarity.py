@@ -926,7 +926,7 @@ def embedding_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos0") % 8).alias("dpos"),
         "val",
     )
-    dims = op_cache.track(dims.cache())
+    dims = op_cache.reuse(dims)
     cents = dims.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cid"), "sub", "dpos", F.col("val").alias("cval")
     )
@@ -939,7 +939,7 @@ def embedding_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dist")
         )
     )
-    code_d = op_cache.track(code_d.cache())
+    code_d = op_cache.reuse(code_d)
     wcode = Window.partitionBy("vec_id", "sub").orderBy("dist", "cid")
     codes = (
         code_d.withColumn("rn", F.row_number().over(wcode))
@@ -1133,7 +1133,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("vec_id", "cid", "qv", (F.col("vec_id") % 2).alias("half"))
     )
-    assign = op_cache.track(assign.cache())
+    assign = op_cache.reuse(assign)
     dimvals = assign.select(
         "cid", "half", F.posexplode("qv").alias("d0", "val")
     ).select("cid", "half", (F.col("d0") + 1).alias("d"), "val")
@@ -1280,7 +1280,7 @@ def similarity_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos0") % 8).alias("dpos"),
         "val",
     )
-    dims = op_cache.track(dims.cache())
+    dims = op_cache.reuse(dims)
     coarse = dims.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("ccid"), "sub", "dpos", F.col("val").alias("ccval")
     )
@@ -1293,7 +1293,7 @@ def similarity_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dist")
         )
     )
-    cd = op_cache.track(cd.cache())
+    cd = op_cache.reuse(cd)
     w_assign = Window.partitionBy("vec_id").orderBy("dist", "ccid")
     assign = (
         cd.withColumn("rn", F.row_number().over(w_assign))
@@ -1325,7 +1325,7 @@ def similarity_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dist")
         )
     )
-    code_d = op_cache.track(code_d.cache())
+    code_d = op_cache.reuse(code_d)
     w_code = Window.partitionBy("vec_id", "sub").orderBy("dist", "cid")
     codes = (
         code_d.withColumn("rn", F.row_number().over(w_code))
@@ -1924,7 +1924,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
     )
-    daily = op_cache.track(daily.cache())
+    daily = op_cache.reuse(daily)
     a = daily.select(F.col("d").alias("da"), F.col("rev").alias("ra"))
     b = daily.select(F.col("d").alias("db"), F.col("rev").alias("rb"))
     pairs = a.join(b, F.col("db") > F.col("da")).select(
@@ -2046,7 +2046,7 @@ def knn_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AS BIGINT) % 4"
         ).alias("bucket"),
     )
-    train = op_cache.track(train.cache())
+    train = op_cache.reuse(train)
     fracs = spark.createDataFrame([(1,), (2,), (4,)], "nb int")
     sqd = F.aggregate(
         F.zip_with(

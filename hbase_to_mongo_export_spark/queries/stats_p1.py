@@ -1195,11 +1195,10 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part")
     # (order, brand) feeds four consumers (order count, brand counts, and
     # both self-join sides) — materialize the dedup once
-    ob = op_cache.track(
+    ob = op_cache.reuse(
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .select("l_orderkey", "p_brand")
         .distinct()
-        .cache()
     )
     n_orders = ob.select("l_orderkey").distinct().agg(
         F.count(F.lit(1)).alias("n_orders")
@@ -1347,7 +1346,7 @@ def theil_sen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.datediff(F.col("b.day"), F.col("a.day")).cast("double")
         ).alias("slope")
     )
-    slopes = op_cache.track(slopes.cache())
+    slopes = op_cache.reuse(slopes)
     stats = slopes.agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.min("slope").alias("mn"),
@@ -2774,7 +2773,7 @@ def tree_depth2_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree learner (XGBoost-style) runs, with the branch filter pushed into
     the scan rather than materializing per-node copies."""
     emb = _t(spark, sf_dir, "embeddings")
-    q = op_cache.track(
+    q = op_cache.reuse(
         sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding")
         .join(
             emb.select(
@@ -2783,7 +2782,6 @@ def tree_depth2_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
         )
         .select("y", "qv")
-        .cache()
     )
 
     def stump(qdf: DataFrame) -> DataFrame:
@@ -2828,7 +2826,7 @@ def tree_depth2_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # output union); without materialization the root-level explode +
     # aggregate over the cached corpus runs three times (guide §1.2).
     # The stump result is one row.
-    root = _mat(stump(q))
+    root = op_cache.checkpoint(stump(q))
     rootb = F.broadcast(
         root.select(F.col("d").alias("rd"), F.col("val").alias("rv"))
     )
@@ -3043,7 +3041,7 @@ def markov_stationary_2step(spark: SparkSession, sf_dir: str) -> DataFrame:
     prob = trans.join(tot, "src").select(
         "src", "dst", (F.col("n").cast("double") / F.col("tn")).alias("pr")
     )
-    prob = op_cache.track(prob.cache())
+    prob = op_cache.reuse(prob)
     types = ev.select(F.col("event_type").alias("s")).distinct()
     n_types = types.count()
     v = types.select("s", (F.lit(1.0) / F.lit(float(n_types))).alias("w"))
@@ -3173,7 +3171,7 @@ def hll_merge_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.shiftright("hv", p).alias("w"),
     )
     regs = ranked.groupBy("g", "bucket").agg(F.expr(f"MAX({rank_sql})").alias("mj"))
-    regs = op_cache.track(regs.cache())
+    regs = op_cache.reuse(regs)
     merged = regs.groupBy("bucket").agg(F.max("mj").alias("mj")).select(
         F.lit("zz_merged").alias("g"), "bucket", "mj"
     )
@@ -4186,7 +4184,7 @@ def spatial_grid_neighbor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(coord.format(ax="x")).alias("x"),
         F.expr(coord.format(ax="y")).alias("y"),
     )
-    pts = op_cache.track(pts.cache())
+    pts = op_cache.reuse(pts)
     cell = pts.select(
         "id", "x", "y",
         (F.col("x") / 150).cast("long").alias("cx"),
@@ -4274,7 +4272,7 @@ def phrase_search_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), " ")
         ).alias("p0", "w"),
     ).select("doc_id", (F.col("p0") + 1).alias("p"), "w")
-    pos = op_cache.track(pos.cache())
+    pos = op_cache.reuse(pos)
     top = (
         pos.groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -4359,7 +4357,7 @@ def markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("event_type").over(wseq).alias("nxt"),
         F.lead("ts").over(wseq).alias("nxt_ts"),
     ).filter(F.col("nxt").isNotNull())
-    seq = op_cache.track(seq.cache())
+    seq = op_cache.reuse(seq)
     cut = F.lit("2024-01-16").cast("timestamp")
     train = seq.filter(F.col("nxt_ts") < cut).select(
         F.col("event_type").alias("prev"), "nxt"
@@ -4454,7 +4452,7 @@ def entity_resolution_canonicalize(spark: SparkSession, sf_dir: str) -> DataFram
     )
     with _scoped_shuffle_partitions(spark, 32):
         comp = dedup_mod.connected_components(pairs, "id_a", "id_b")
-        comp = comp.localCheckpoint(eager=True)
+        comp = op_cache.checkpoint(comp)
     clusters = comp.groupBy(F.col("component").alias("canonical_id")).agg(
         F.count(F.lit(1)).alias("n_members")
     )
@@ -4590,7 +4588,7 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(coord.format(ax="x")).alias("x"),
         F.expr(coord.format(ax="y")).alias("y"),
     )
-    pts = op_cache.track(pts.cache())
+    pts = op_cache.reuse(pts)
     cell = pts.select(
         "id", "x", "y",
         (F.col("x") / 150).cast("long").alias("cx"),
@@ -4626,10 +4624,10 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(d2 <= 22500)
         .select("ia", "ib")
     )
-    nbr = op_cache.track(nbr.cache())
+    nbr = op_cache.reuse(nbr)
     deg = nbr.groupBy(F.col("ia").alias("id")).agg(F.count(F.lit(1)).alias("n"))
     core = deg.filter(F.col("n") + 1 >= 4).select("id")
-    core = op_cache.track(core.cache())
+    core = op_cache.reuse(core)
     cedge = (
         nbr.join(core.withColumnRenamed("id", "ia"), "ia")
         .join(core.withColumnRenamed("id", "ib"), "ib")
@@ -4637,7 +4635,7 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with _scoped_shuffle_partitions(spark, 32):
         comp = dedup_mod.connected_components(cedge, "ia", "ib", nodes=core)
-        comp = comp.localCheckpoint(eager=True)
+        comp = op_cache.checkpoint(comp)
     comp = comp.select("id", F.col("component").alias("cluster_id"))
     border = (
         nbr.join(core.withColumnRenamed("id", "ia"), "ia", "left_anti")
@@ -5028,7 +5026,7 @@ def data_budget_epoch_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("wt"),
     )
-    w = op_cache.track(w.cache())
+    w = op_cache.reuse(w)
     tot = w.agg(
         (F.sum("toks").cast("bigint") / 2).cast("bigint").alias("budget"),
         F.sum("wt").cast("bigint").alias("wsum"),
@@ -5047,7 +5045,7 @@ def data_budget_epoch_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("is_capped"),
         "budget",
     )
-    r1 = op_cache.track(r1.cache())
+    r1 = op_cache.reuse(r1)
     l = r1.agg(
         (F.max("budget") - F.sum("capped")).cast("bigint").alias("leftover"),
         F.sum(F.when(F.col("is_capped") == 0, F.col("wt")).otherwise(0))
@@ -5389,7 +5387,7 @@ def apriori_triple_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
         .distinct()
     )
-    baskets = op_cache.track(baskets.cache())
+    baskets = op_cache.reuse(baskets)
     a = baskets.alias("a")
     c = baskets.alias("c")
     pairs = (
@@ -5399,7 +5397,7 @@ def apriori_triple_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("sup") >= 3)
         .select("b1", "b2")
     )
-    pairs = op_cache.track(pairs.cache())
+    pairs = op_cache.reuse(pairs)
     p1 = pairs.alias("p1")
     p2 = pairs.select(
         F.col("b1").alias("q1"), F.col("b2").alias("b3")

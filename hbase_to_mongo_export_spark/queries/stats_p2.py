@@ -68,7 +68,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    cls = op_cache.track(cls.cache())
+    cls = op_cache.reuse(cls)
     cls_tot = cls.groupBy("nation", "seg").agg(F.sum("cnt").alias("cn"))
     glob = cls.groupBy("pr").agg(F.sum("cnt").alias("g"))
     gt = glob.agg(F.sum("g").alias("gt"))
@@ -351,7 +351,7 @@ def zorder_block_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_MORTON_SPARK.format(x="x", y="y")).alias("zcode"),
         (F.col("x") * 256 + F.col("y")).alias("rcode"),
     )
-    coded = op_cache.track(coded.cache())
+    coded = op_cache.reuse(coded)
     matched = coded.filter(
         (F.col("x") >= 64) & (F.col("x") < 96)
         & (F.col("y") >= 32) & (F.col("y") < 64)
@@ -433,7 +433,7 @@ def sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(wd)
         .alias("cum_llr"),
     )
-    llr = op_cache.track(llr.cache())
+    llr = op_cache.reuse(llr)
     crossing = llr.filter(F.abs("cum_llr") > thr).agg(
         F.min("d").alias("first_cross")
     )
@@ -482,7 +482,7 @@ def exact_kth_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivially correct, quadratically more expensive at scale (a full
     sort vs one bucket's)."""
     o = _t(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
-    o = op_cache.track(o.cache())
+    o = op_cache.reuse(o)
     n = o.count()
     import math as _math
 
@@ -624,7 +624,7 @@ def source_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sh = op_cache.track(sh.cache())
+    sh = op_cache.reuse(sh)
     sizes = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = sh.alias("a")
     b = sh.select(F.col("source").alias("s2"), F.col("g").alias("g2"))
@@ -733,7 +733,7 @@ def skyline_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = li.groupBy(F.col("l_quantity").alias("q")).agg(
         F.min("l_extendedprice").alias("p")
     )
-    cand = op_cache.track(cand.cache())
+    cand = op_cache.reuse(cand)
     d = cand.select(F.col("q").alias("dq"), F.col("p").alias("dp"))
     dominated = cand.join(
         F.broadcast(d),
@@ -804,7 +804,7 @@ def fractional_knapsack_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ratio"
         ),
     )
-    items = op_cache.track(items.cache())
+    items = op_cache.reuse(items)
     b = items.agg(F.expr("CAST(sum(q) AS BIGINT) div 100").alias("b"))
     wr = Window.orderBy(
         F.desc("ratio"), "l_orderkey", "l_linenumber"
@@ -1143,7 +1143,7 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims = qz.select(
         "vec_id", F.posexplode("qv").alias("i", "val")
     ).select("vec_id", F.col("i").cast("int").alias("i"), "val")
-    dims = op_cache.track(dims.cache())
+    dims = op_cache.reuse(dims)
     centers = [
         int(qz.agg(F.min("vec_id").alias("m")).collect()[0]["m"])
     ]
@@ -1348,7 +1348,7 @@ def simpsons_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
     )
-    per_g = op_cache.track(per_g.cache())
+    per_g = op_cache.reuse(per_g)
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     signs = per_g.select(
         "g",
@@ -1428,7 +1428,7 @@ def littles_law_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("s"),
         (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("e"),
     )
-    iv = op_cache.track(iv.cache())
+    iv = op_cache.reuse(iv)
     pts = iv.select(
         F.col("s").alias("t"), F.lit(1).alias("delta"), "event_id"
     ).unionByName(
@@ -1802,7 +1802,7 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("prev", "nxt")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    trans = op_cache.track(trans.cache())
+    trans = op_cache.reuse(trans)
     ptot = trans.groupBy("prev").agg(F.sum("n").alias("np"))
     tot = int(trans.agg(F.sum("n")).collect()[0][0])
     cond = trans.join(F.broadcast(ptot), "prev").select(
@@ -2248,7 +2248,7 @@ def anomaly_ensemble_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    daily = op_cache.track(daily.cache())
+    daily = op_cache.reuse(daily)
     stats = daily.agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("n").alias("sn"),
@@ -2733,7 +2733,7 @@ def lead_lag_correlation_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("p"),
     )
-    daily = op_cache.track(daily.cache())
+    daily = op_cache.reuse(daily)
     lags = spark.range(0, 8).select(F.col("id").cast("int").alias("lag"))
     a = daily.select(F.col("d").alias("da"), F.col("c").alias("x"))
     b = daily.select(F.col("d").alias("db"), F.col("p").alias("y"))
@@ -2917,7 +2917,7 @@ def fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_size").alias("fs"),
         F.split("p_name", " ").getItem(1).alias("fw"),
     )
-    p = op_cache.track(p.cache())
+    p = op_cache.reuse(p)
     nn = p.agg(F.count(F.lit(1)).alias("n"))
 
     def u_of(field: str) -> DataFrame:
@@ -3202,7 +3202,7 @@ def shapley_attribution_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("mask")
         .agg(F.count(F.lit(1)).alias("n_conv"))
     )
-    mask_conv = op_cache.track(mask_conv.cache())
+    mask_conv = op_cache.reuse(mask_conv)
     subsets = spark.range(0, 16).select(F.col("id").cast("int").alias("s"))
     v = (
         subsets.join(
@@ -3213,7 +3213,7 @@ def shapley_attribution_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s")
         .agg(F.coalesce(F.sum("n_conv"), F.lit(0)).alias("v"))
     )
-    v = op_cache.track(v.cache())
+    v = op_cache.reuse(v)
     channels = spark.createDataFrame(
         [("view", 1), ("click", 2), ("signup", 4), ("error", 8)],
         "channel string, bit int",
@@ -3313,7 +3313,7 @@ def benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("x"),
         )
     )
-    per_nation = op_cache.track(per_nation.cache())
+    per_nation = op_cache.reuse(per_nation)
     glob = per_nation.agg(
         (
             F.sum("x").cast("double") / F.sum("n").cast("double")
@@ -3468,7 +3468,7 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("y") * F.col("y")).alias("syy"),
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
     )
-    mom = op_cache.track(mom.cache())
+    mom = op_cache.reuse(mom)
     pooled = mom.agg(
         F.sum("n").alias("n"),
         F.sum("sx").alias("psx"),
@@ -3583,7 +3583,7 @@ def empirical_bayes_shrunk_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x",
         (F.col("x").cast("double") / F.col("n").cast("double")).alias("r"),
     )
-    rates = op_cache.track(rates.cache())
+    rates = op_cache.reuse(rates)
     mom = rates.agg(
         F.count(F.lit(1)).alias("k"),
         F.expr(
@@ -4217,7 +4217,7 @@ def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = scored.select(
         "qid", "cid", "rel", F.row_number().over(wr).alias("rk")
     )
-    ranked = op_cache.track(ranked.cache())
+    ranked = op_cache.reuse(ranked)
     dcg = (
         ranked.filter(F.col("rk") <= 10)
         .groupBy("qid")
@@ -4545,7 +4545,7 @@ def feature_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") != "")
         .distinct()
     )
-    toks = op_cache.track(toks.cache())
+    toks = op_cache.reuse(toks)
     buckets = toks.groupBy(
         F.expr("CAST(conv(substring(md5(w),1,15),16,10) AS BIGINT) % 1024").alias(
             "f"
@@ -4781,7 +4781,7 @@ def isotonic_minimax_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(wd).alias("i"),
         F.sum("y").over(wd).alias("s"),
     )
-    idx = op_cache.track(idx.cache())
+    idx = op_cache.reuse(idx)
     j = idx.select(F.col("i").alias("j"), F.col("s").alias("sj"))
     k = idx.select(F.col("i").alias("k"), F.col("s").alias("sk"))
     jp = idx.select((F.col("i") + 1).alias("jn"), F.col("s").alias("sp"))
@@ -4950,7 +4950,7 @@ def mahalanobis_outliers_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("y"))
     )
-    per_order = op_cache.track(per_order.cache())
+    per_order = op_cache.reuse(per_order)
     mom = per_order.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
@@ -5059,7 +5059,7 @@ def gformula_standardized_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = strat.groupBy("s", "arm").agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("x")
     )
-    cells = op_cache.track(cells.cache())
+    cells = op_cache.reuse(cells)
     sw = cells.groupBy("s").agg(F.sum("n").alias("ns"))
     tot = cells.agg(F.sum("n").alias("nt"))
     rates = (
@@ -5160,7 +5160,7 @@ def burrows_delta_style(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), " ")
         ).alias("w"),
     ).filter(F.col("w") != "")
-    t2 = op_cache.track(t2.cache())
+    t2 = op_cache.reuse(t2)
     fw = (
         t2.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -5182,7 +5182,7 @@ def burrows_delta_style(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("fr"),
         )
     )
-    freq = op_cache.track(freq.cache())
+    freq = op_cache.reuse(freq)
     ns = stot.agg(F.count(F.lit(1)).alias("k"))
     mu = freq.groupBy("w").agg(
         F.expr(
@@ -5292,7 +5292,7 @@ def dirichlet_ql_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), " ")
         ).alias("w"),
     ).filter(F.col("w") != "")
-    t2 = op_cache.track(t2.cache())
+    t2 = op_cache.reuse(t2)
     q = (
         t2.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))

@@ -180,7 +180,7 @@ def prefix_cache_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: x != "",
         ).alias("ws"),
     )
-    words = op_cache.track(words.cache())
+    words = op_cache.reuse(words)
     ks = spark.createDataFrame([(8,), (16,), (32,)], "k int")
     prefixed = words.crossJoin(F.broadcast(ks)).select(
         "k",
@@ -276,7 +276,7 @@ def negative_sampling_distribution(spark: SparkSession, sf_dir: str) -> DataFram
             ),
         )
     )
-    top = op_cache.track(top.cache())
+    top = op_cache.reuse(top)
     z = top.agg(
         F.expr(
             "aggregate(array_sort(collect_list(struct(w, u))), "
@@ -328,7 +328,7 @@ def logistic_newton_glm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("y"),
     )
-    per_user = op_cache.track(per_user.cache())
+    per_user = op_cache.reuse(per_user)
 
     def folds(src: DataFrame, terms: dict[str, str]) -> DataFrame:
         aggs = [
@@ -419,7 +419,7 @@ def poisson_glm_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("y"),
     )
-    per_user = op_cache.track(per_user.cache())
+    per_user = op_cache.reuse(per_user)
 
     def folds(src: DataFrame, terms: dict[str, str]) -> DataFrame:
         aggs = [
@@ -709,7 +709,7 @@ def binned_kde_density(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    binned = op_cache.track(binned.cache())
+    binned = op_cache.reuse(binned)
     n = binned.agg(F.sum("c").alias("n"))
     pts = spark.range(0, 20).select(
         F.col("id").cast("int").alias("gi"),
@@ -920,7 +920,7 @@ def chain_ladder_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("cust"),
         F.date_trunc("month", F.to_date("o_orderdate")).cast("date").alias("m"),
     ).agg(F.count(F.lit(1)).alias("n"))
-    om = op_cache.track(om.cache())
+    om = op_cache.reuse(om)
     coh = om.groupBy("cust").agg(F.min("m").alias("m0"))
     aged = om.join(coh, "cust").select(
         "m0",
@@ -935,7 +935,7 @@ def chain_ladder_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("m0", "age")
         .agg(F.sum("n").alias("inc"))
     )
-    tri = op_cache.track(tri.cache())
+    tri = op_cache.reuse(tri)
     ages = spark.range(0, 7).select(F.col("id").cast("int").alias("age"))
     grid = tri.select("m0").distinct().crossJoin(F.broadcast(ages))
     wc = Window.partitionBy("m0").orderBy("age")
@@ -1160,7 +1160,7 @@ def ftl_regret_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("rev")
         )
     )
-    rev = op_cache.track(rev.cache())
+    rev = op_cache.reuse(rev)
     months = rev.select("m").distinct()
     brands = rev.select("brand").distinct()
     grid = (
@@ -1174,7 +1174,7 @@ def ftl_regret_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    grid = op_cache.track(grid.cache())
+    grid = op_cache.reuse(grid)
     wcum = Window.partitionBy("brand").orderBy("m")
     cum = grid.select(
         "brand", "m", "rev", F.sum("rev").over(wcum).alias("cumrev")
@@ -1295,7 +1295,7 @@ def shift_share_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("period") == 1, F.col("rev"))).alias("r1"),
         F.max(F.when(F.col("period") == 2, F.col("rev"))).alias("r2"),
     )
-    wide = op_cache.track(wide.cache())
+    wide = op_cache.reuse(wide)
     tot = wide.agg(F.sum("r1").alias("t1"), F.sum("r2").alias("t2"))
     dec = wide.crossJoin(F.broadcast(tot)).select(
         "region",
@@ -1831,7 +1831,7 @@ def hamilton_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("fl"),
     )
-    quota = op_cache.track(quota.cache())
+    quota = op_cache.reuse(quota)
     short = quota.agg((F.lit(100) - F.sum("fl")).alias("remaining"))
     wr = Window.orderBy(F.desc(F.col("q") - F.col("fl")), "nation")
     ranked = quota.select(
@@ -1911,7 +1911,7 @@ def trimmed_mean_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("dim0") + 1).alias("dim"),
         F.col("v").cast("double").alias("val"),
     )
-    pts = op_cache.track(pts.cache())
+    pts = op_cache.reuse(pts)
     wr = Window.partitionBy("dim").orderBy("val", "vec_id")
     wn = Window.partitionBy("dim")
     ranked = pts.select(
@@ -2017,7 +2017,7 @@ def geometric_median_weiszfeld(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("dim0") + 1).alias("dim"),
         F.col("v").cast("double").alias("val"),
     )
-    pts = op_cache.track(pts.cache())
+    pts = op_cache.reuse(pts)
     c0 = pts.groupBy("dim").agg(
         (
             F.expr(
@@ -2027,7 +2027,7 @@ def geometric_median_weiszfeld(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count(F.lit(1)).cast("double")
         ).alias("c")
     )
-    c0 = op_cache.track(c0.cache())
+    c0 = op_cache.reuse(c0)
 
     def dist_to(center: DataFrame) -> DataFrame:
         return (
@@ -2065,7 +2065,7 @@ def geometric_median_weiszfeld(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    c1 = op_cache.track(step(c0).cache())
+    c1 = op_cache.reuse(step(c0))
     c2 = step(c1)
     return (
         c2.join(
@@ -2105,7 +2105,7 @@ def submodular_coverage_selection(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("w") != "")
         .distinct()
     )
-    dt = op_cache.track(dt.cache())
+    dt = op_cache.reuse(dt)
     utot = dt.select("w").distinct().count()
     covered = dt.select("w").filter(F.lit(False))
     rows = []
@@ -2126,7 +2126,7 @@ def submodular_coverage_selection(spark: SparkSession, sf_dir: str) -> DataFrame
                 dt.filter(F.col("doc_id") == win_doc).select("w")
             ).distinct()
         )
-        covered = op_cache.track(covered.cache())
+        covered = op_cache.reuse(covered)
         n_cov = covered.count()
         rows.append(
             (
@@ -2164,13 +2164,13 @@ def mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = cands.crossJoin(F.broadcast(q)).select(
         "cid", sim_mod.cosine(F.col("qv"), F.col("cv")).alias("rel")
     )
-    rel = op_cache.track(rel.cache())
+    rel = op_cache.reuse(rel)
     a = cands.select(F.col("cid").alias("ca"), F.col("cv").alias("va"))
     b = cands.select(F.col("cid").alias("cb"), F.col("cv").alias("vb"))
     sims = a.join(b, F.col("ca") != F.col("cb")).select(
         "ca", "cb", sim_mod.cosine(F.col("va"), F.col("vb")).alias("sim")
     )
-    sims = op_cache.track(sims.cache())
+    sims = op_cache.reuse(sims)
     selected: list[int] = []
     rows = []
     for r in range(1, 6):
@@ -2289,7 +2289,7 @@ def panel_fixed_effects_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y"),
         )
     )
-    panel = op_cache.track(panel.cache())
+    panel = op_cache.reuse(panel)
     um = panel.groupBy("unit").agg(
         (
             F.expr(
@@ -2342,7 +2342,7 @@ def panel_fixed_effects_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("yg"),
         F.count(F.lit(1)).alias("n"),
     )
-    gm = op_cache.track(gm.cache())
+    gm = op_cache.reuse(gm)
     dem = (
         panel.join(F.broadcast(um), "unit")
         .join(F.broadcast(tm), "t")
@@ -2652,7 +2652,7 @@ def kupiec_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     chg = daily.select(
         "d", (F.col("rev") - F.lag("rev").over(wd)).alias("delta")
     ).filter(F.col("delta").isNotNull())
-    chg = op_cache.track(chg.cache())
+    chg = op_cache.reuse(chg)
     wrn = Window.orderBy("delta", "d")
     wc = Window.partitionBy()
     var95 = (
@@ -2758,7 +2758,7 @@ def topk_turnover_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 10)
         .select("m", "brand")
     )
-    topk = op_cache.track(topk.cache())
+    topk = op_cache.reuse(topk)
     wm = Window.orderBy("m")
     months = topk.select("m").distinct().select(
         "m", F.row_number().over(wm).alias("i")
@@ -2851,7 +2851,7 @@ def anova_oneway_f(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").alias("s"),
         F.sum(F.col("x") * F.col("x")).alias("ss"),
     )
-    grp = op_cache.track(grp.cache())
+    grp = op_cache.reuse(grp)
     tot = grp.agg(
         F.sum("n").alias("n"),
         F.sum("s").alias("s"),
@@ -2946,7 +2946,7 @@ def levene_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(18,2)").alias("x"),
         "o_orderkey",
     )
-    obs = op_cache.track(obs.cache())
+    obs = op_cache.reuse(obs)
     wrn = Window.partitionBy("g").orderBy("x", "o_orderkey")
     wn = Window.partitionBy("g")
     med = (
@@ -2967,7 +2967,7 @@ def levene_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("z").alias("s"),
         F.sum(F.col("z") * F.col("z")).alias("ss"),
     )
-    grp = op_cache.track(grp.cache())
+    grp = op_cache.reuse(grp)
     tot = grp.agg(
         F.sum("n").alias("n"),
         F.sum("s").alias("s"),
@@ -3055,7 +3055,7 @@ def runs_test_randomness(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
     )
-    daily = op_cache.track(daily.cache())
+    daily = op_cache.reuse(daily)
     wrn = Window.orderBy("rev", "d")
     wc = Window.partitionBy()
     med = (
@@ -3164,7 +3164,7 @@ def ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wm = Window.orderBy("m")
     idx = monthly.select("x", F.row_number().over(wm).alias("i"))
-    idx = op_cache.track(idx.cache())
+    idx = op_cache.reuse(idx)
     mean_ = idx.agg(
         (
             F.expr(
@@ -3175,11 +3175,11 @@ def ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mu"),
         F.count(F.lit(1)).alias("n"),
     )
-    mean_ = op_cache.track(mean_.cache())
+    mean_ = op_cache.reuse(mean_)
     dev = idx.crossJoin(F.broadcast(mean_)).select(
         "i", (F.col("x") - F.col("mu")).alias("e")
     )
-    dev = op_cache.track(dev.cache())
+    dev = op_cache.reuse(dev)
     denom = dev.agg(
         F.expr(
             "aggregate(array_sort(collect_list(struct(i, e * e AS s))), "
@@ -3276,7 +3276,7 @@ def kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("x"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y"),
     )
-    monthly = op_cache.track(monthly.cache())
+    monthly = op_cache.reuse(monthly)
     a = monthly.select(
         F.col("m").alias("ma"), F.col("x").alias("xa"), F.col("y").alias("ya")
     )
@@ -3398,7 +3398,7 @@ def durbin_watson_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = monthly.select(
         "y", F.row_number().over(wm).cast("double").alias("t")
     )
-    idx = op_cache.track(idx.cache())
+    idx = op_cache.reuse(idx)
     mom = idx.agg(
         F.count(F.lit(1)).alias("n"),
         F.expr(
@@ -3434,7 +3434,7 @@ def durbin_watson_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
             - (F.col("ybar") + F.col("slope") * (F.col("t") - F.col("tbar")))
         ).alias("e"),
     )
-    res = op_cache.track(res.cache())
+    res = op_cache.reuse(res)
     a = res.select(F.col("t").alias("ta"), F.col("e").alias("ea"))
     b = res.select(F.col("t").alias("tb"), F.col("e").alias("eb"))
     num = (
@@ -3521,7 +3521,7 @@ def moods_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(18,2)").alias("x"),
         "o_orderkey",
     )
-    obs = op_cache.track(obs.cache())
+    obs = op_cache.reuse(obs)
     wrn = Window.orderBy("x", "o_orderkey")
     wc = Window.partitionBy()
     med = (
@@ -3545,7 +3545,7 @@ def moods_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    cells = op_cache.track(cells.cache())
+    cells = op_cache.reuse(cells)
     tot = cells.agg(
         F.sum("above").alias("ta"),
         F.sum("below").alias("tb"),
@@ -3801,7 +3801,7 @@ def ood_diagonal_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("dim0") + 1).alias("dim"),
         F.col("v").cast("double").alias("val"),
     )
-    pts = op_cache.track(pts.cache())
+    pts = op_cache.reuse(pts)
     sfold = (
         "aggregate(array_sort(collect_list(struct(vec_id, val))), "
         "cast(0 as double), (acc, e) -> acc + e.val)"
@@ -4035,7 +4035,7 @@ def chatterjee_xi_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(wx).alias("xi"),
         F.rank().over(wy).alias("ry"),
     )
-    ranked = op_cache.track(ranked.cache())
+    ranked = op_cache.reuse(ranked)
     a = ranked.select(F.col("xi").alias("ia"), F.col("ry").alias("ra"))
     b = ranked.select(F.col("xi").alias("ib"), F.col("ry").alias("rb"))
     diffs = a.join(b, F.col("ib") == F.col("ia") + 1).select(
@@ -4125,7 +4125,7 @@ def structural_break_chow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(wm).alias("i"),
         F.count(F.lit(1)).over(wc).alias("n"),
     )
-    idx = op_cache.track(idx.cache())
+    idx = op_cache.reuse(idx)
     # decimal sums are exact and associative — no fold-order pinning needed
     tot = idx.agg(
         F.max("n").alias("n"),
@@ -4296,7 +4296,7 @@ def newsvendor_quantile_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).alias("demand")
     )
-    daily = op_cache.track(daily.cache())
+    daily = op_cache.reuse(daily)
     wr = Window.orderBy("demand", "d")
     wc = Window.partitionBy()
     pick = (
@@ -4394,7 +4394,7 @@ def secretary_stopping_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(wi).alias("i"),
         F.count(F.lit(1)).over(wc).alias("n"),
     )
-    seq = op_cache.track(seq.cache())
+    seq = op_cache.reuse(seq)
     cutoff = seq.agg(
         F.expr("CAST(MAX(n) * 37 AS BIGINT) DIV 100").alias("k"),
         F.max("n").alias("n"),
@@ -4514,7 +4514,7 @@ def exact_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("y", F.row_number().over(Window.orderBy(F.desc("mon"))).alias("i"))
         .filter(F.col("i") <= 12)
     )
-    last12 = op_cache.track(last12.cache())
+    last12 = op_cache.reuse(last12)
     obs = last12.agg(
         F.sum(
             F.when(F.col("i") <= 6, F.col("y")).otherwise(
@@ -4648,7 +4648,7 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(0 as double), (acc, e) -> acc + e.p)"
         ).alias("sp"),
     )
-    bins = op_cache.track(bins.cache())
+    bins = op_cache.reuse(bins)
     base = bins.agg(F.sum("nk").alias("n"), F.sum("pk").alias("pos"))
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     mean_p = F.col("sp") / d("nk")
@@ -4785,7 +4785,7 @@ def itemitem_cosine_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_orderkey").alias("basket"), F.col("p_brand").alias("item"))
         .distinct()
     )
-    baskets = op_cache.track(baskets.cache())
+    baskets = op_cache.reuse(baskets)
     item_n = baskets.groupBy("item").agg(F.count(F.lit(1)).alias("n"))
     a = baskets.select(F.col("basket").alias("ba"), F.col("item").alias("ia"))
     b = baskets.select(F.col("basket").alias("bb"), F.col("item").alias("ib"))
@@ -4839,7 +4839,7 @@ def expectile_asymmetric_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("y")
     )
-    daily = op_cache.track(daily.cache())
+    daily = op_cache.reuse(daily)
     mu = daily.agg(
         (
             F.expr(
@@ -5083,7 +5083,7 @@ def g2_keyness_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("tgt") == 1, 1).otherwise(0)).alias("a"),
         F.sum(F.when(F.col("tgt") == 0, 1).otherwise(0)).alias("b"),
     )
-    counts = op_cache.track(counts.cache())
+    counts = op_cache.reuse(counts)
     totals = counts.agg(F.sum("a").alias("ta"), F.sum("b").alias("tb"))
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     ea = (F.col("a") + F.col("b")).cast("double") * d("ta") / (
@@ -5189,9 +5189,9 @@ def recsys_coverage_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    baskets = op_cache.track(baskets.cache())
+    baskets = op_cache.reuse(baskets)
     item_n = baskets.groupBy("item").agg(F.count(F.lit(1)).alias("n"))
-    item_n = op_cache.track(item_n.cache())
+    item_n = op_cache.reuse(item_n)
     pop_rank = item_n.select(
         "item",
         F.row_number().over(Window.orderBy(F.desc("n"), "item")).alias("prank"),
@@ -5223,7 +5223,7 @@ def recsys_coverage_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= 3)
         .select("ia", "ib")
     )
-    recs = op_cache.track(recs.cache())
+    recs = op_cache.reuse(recs)
     cat = item_n.agg(F.count(F.lit(1)).alias("n_items"))
     cov = recs.agg(
         F.countDistinct("ib").alias("n_recommended"),
@@ -5326,7 +5326,7 @@ def shannon_code_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    cnt = op_cache.track(cnt.cache())
+    cnt = op_cache.reuse(cnt)
     tot = cnt.agg(F.sum("c").alias("n"))
     ls = spark.range(0, 41).select(F.col("id").cast("int").alias("l"))
     lens = (

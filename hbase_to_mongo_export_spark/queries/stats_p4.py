@@ -238,7 +238,7 @@ def jackknife_delete_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AS BIGINT) % 10"
         ).alias("bucket")
     ).agg(F.sum("s").alias("ss"), F.sum("y").alias("sy"))
-    bucket_mom = op_cache.track(bucket_mom.cache())
+    bucket_mom = op_cache.reuse(bucket_mom)
     tot = bucket_mom.agg(
         F.sum("ss").alias("ts"),
         F.sum("sy").alias("ty"),
@@ -307,7 +307,7 @@ def huber_location_m_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("y")
     )
-    daily = op_cache.track(daily.cache())
+    daily = op_cache.reuse(daily)
     wrn = Window.orderBy("y", "d")
     wc = Window.partitionBy()
     med = (
@@ -319,7 +319,7 @@ def huber_location_m_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == F.expr("(n + 1) DIV 2"))
         .select(F.col("y").alias("m"))
     )
-    med = op_cache.track(med.cache())
+    med = op_cache.reuse(med)
     wdev = Window.orderBy(F.abs(F.col("y") - F.col("m")), "d")
     mad = (
         daily.crossJoin(F.broadcast(med))
@@ -335,7 +335,7 @@ def huber_location_m_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale = mad.select(
         (F.lit(1.5).cast("double") * F.col("mad")).alias("k")
     )
-    scale = op_cache.track(scale.cache())
+    scale = op_cache.reuse(scale)
     mu = med.select(F.col("m").alias("mu"))
     for _ in range(2):
         w = (
@@ -634,7 +634,7 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (d("nh") * (F.col("nh") - 1).cast("double"))
         ).alias("sh"),
     )
-    sd = op_cache.track(sd.cache())
+    sd = op_cache.reuse(sd)
     tot = sd.agg(
         F.expr(
             "aggregate(array_sort(collect_list(struct(h, "
@@ -856,7 +856,7 @@ def preference_pairs_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(wd).alias("rd"),
         F.row_number().over(wa).alias("ra"),
     )
-    r = op_cache.track(r.cache())
+    r = op_cache.reuse(r)
     c = r.filter(F.col("rd") == 1).select(
         "lang",
         F.col("doc_id").alias("chosen_id"),
@@ -1310,7 +1310,7 @@ def mmd_quadratic_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "DOUBLE) * 64, 0) AS INT) + 128, 0))"
         ).alias("qv"),
     )
-    q = op_cache.track(q.cache())
+    q = op_cache.reuse(q)
     counts = q.agg(
         F.sum("gx").alias("n"), F.sum(1 - F.col("gx")).alias("m")
     )
@@ -1502,7 +1502,7 @@ def count_min_sketch_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = ev.select(
         F.get_json_object("props", "$.k").cast("bigint").alias("item")
     ).filter(F.col("item").isNotNull())
-    items = op_cache.track(items.cache())
+    items = op_cache.reuse(items)
     rows_ = spark.range(4).select(F.col("id").cast("int").alias("j"))
 
     def bucket(jcol, itemcol):
@@ -1593,7 +1593,7 @@ def levenshtein_blocked_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = part.select(
         "p_partkey", "p_brand", "p_size", F.lower(F.col("p_name")).alias("nm")
     )
-    b = op_cache.track(b.cache())
+    b = op_cache.reuse(b)
     a, c = b.alias("a"), b.alias("c")
     joined = a.join(
         c,
@@ -1695,7 +1695,7 @@ def iptw_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("yv")
         )
     )
-    y = op_cache.track(y.cache())
+    y = op_cache.reuse(y)
     strata = y.groupBy("h").agg(
         F.count(F.lit(1)).alias("nh"),
         F.sum("t").alias("th"),
@@ -1890,7 +1890,7 @@ def ips_offline_policy_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object("props", "$.k").cast("bigint").alias("item"),
         F.col("value").cast("decimal(18,4)").alias("r"),
     ).filter(F.col("item").isNotNull())
-    logged = op_cache.track(logged.cache())
+    logged = op_cache.reuse(logged)
     tot = logged.agg(
         F.count(F.lit(1)).alias("n"), F.sum("r").alias("sum_r")
     )
@@ -2171,7 +2171,7 @@ def kruskal_wallis_h(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 50-row value histogram feeds BOTH the rank window and the tie
     # aggregate — materialize once so the lineitem scan behind it runs
     # once, not twice
-    cnt = _mat(li.groupBy("q").agg(F.count(F.lit(1)).alias("c")))
+    cnt = op_cache.checkpoint(li.groupBy("q").agg(F.count(F.lit(1)).alias("c")))
     wq = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, -1)
     ranked = cnt.select(
         "q",
@@ -2514,12 +2514,12 @@ def cochran_q_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the join; x feeds both marginal aggregates. Materializing the three
     # bounded frames (1 row / users×types / ≤users×types) keeps every
     # events-scale pass single (guide §1.2).
-    k = _mat(ev.agg(F.countDistinct("event_type").alias("k")))
-    cnt = _mat(
+    k = op_cache.checkpoint(ev.agg(F.countDistinct("event_type").alias("k")))
+    cnt = op_cache.checkpoint(
         ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("c"))
     )
     tot = cnt.groupBy("user_id").agg(F.sum("c").alias("t"))
-    x = _mat(
+    x = op_cache.checkpoint(
         cnt.join(tot, "user_id")
         .crossJoin(F.broadcast(k))
         .filter(F.col("k") * F.col("c") > F.col("t"))
@@ -3338,7 +3338,7 @@ def ransac_line_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small aggregate to ONE partition, and materializing that froze
     # the sweep single-threaded (guide §2.5 — input skew after a
     # coalesced intermediate).
-    pts = _mat(
+    pts = op_cache.checkpoint(
         o.join(li, o.o_orderkey == li.l_orderkey)
         .groupBy(F.col("o_orderkey").alias("ok"))
         .agg(

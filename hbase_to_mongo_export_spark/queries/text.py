@@ -652,8 +652,8 @@ def naive_bayes_lang_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # totals, vocabulary size); materialize the vocab-sized aggregate once
     # so the corpus token stream is scanned exactly once — the totals then
     # cost O(vocab), not O(corpus tokens), at any scale
-    model = op_cache.track(
-        tok_tr.groupBy("lang", "w").agg(F.count(F.lit(1)).alias("cnt")).cache()
+    model = op_cache.reuse(
+        tok_tr.groupBy("lang", "w").agg(F.count(F.lit(1)).alias("cnt"))
     )
     tot = model.groupBy("lang").agg(F.sum("cnt").alias("tot"))
     vocab = model.select("w").distinct().agg(F.count(F.lit(1)).alias("v"))
@@ -1124,11 +1124,10 @@ def js_divergence_lang_unigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # vocab-sized count table feeds three consumers (pair join, totals,
     # lang list) — materialize once so the corpus tokenizes exactly once
-    cnt = op_cache.track(
+    cnt = op_cache.reuse(
         docs.select("lang", F.explode(ws).alias("w"))
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .cache()
     )
     tot = cnt.groupBy("lang").agg(F.sum("c").alias("t"))
     langs = cnt.select("lang").distinct()
@@ -1564,7 +1563,7 @@ def bpe_train_3rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = vocab.select(
         "w", "freq", F.concat_ws("|", F.split("w", "")).alias("acc")
     )
-    state = state.localCheckpoint(eager=True)
+    state = op_cache.checkpoint(state)
     rows = []
     for rnd in (1, 2, 3):
         pairs = (
@@ -1600,16 +1599,14 @@ def bpe_train_3rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark.sql import Observation
 
         obs = Observation()
-        state = (
-            state.select("w", "freq", F.expr(fold).alias("acc"))
-            .observe(
+        nxt = op_cache.checkpoint(
+            state.select("w", "freq", F.expr(fold).alias("acc")).observe(
                 obs,
-                F.sum(
-                    F.col("freq") * F.size(F.split("acc", r"\|"))
-                ).alias("t"),
+                F.sum(F.col("freq") * F.size(F.split("acc", r"\|"))).alias("t"),
             )
-            .localCheckpoint(eager=True)
         )
+        op_cache.release(state)
+        state = nxt
         tot = obs.get["t"]
         rows.append((rnd, a, b, a + b, n, int(tot)))
     return spark.createDataFrame(
@@ -1698,11 +1695,11 @@ def bm25_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("t"),
     )
-    tok = op_cache.track(tok.cache())
+    tok = op_cache.reuse(tok)
     dl = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("double").alias("dl")
     )
-    dl = op_cache.track(dl.cache())
+    dl = op_cache.reuse(dl)
     stats = dl.agg(
         (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1720,7 +1717,7 @@ def bm25_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 3)
         .select("qid", "t")
     )
-    qterms = op_cache.track(qterms.cache())
+    qterms = op_cache.reuse(qterms)
     terms = qterms.select("t").distinct()
     tfq = (
         tok.join(F.broadcast(terms), "t")
@@ -1841,7 +1838,7 @@ def token_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), " ")
         ).alias("n_tok"),
     )
-    toks = op_cache.track(toks.cache())
+    toks = op_cache.reuse(toks)
     wrr = Window.orderBy(F.col("n_tok").desc(), "doc_id")
     rr = toks.select(
         "n_tok",
@@ -2013,7 +2010,7 @@ def kneser_ney_bigram_top30(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
     )
     c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
-    c12 = op_cache.track(c12.cache())
+    c12 = op_cache.reuse(c12)
     c1 = c12.groupBy("w1").agg(
         F.sum("c").alias("tot"), F.count(F.lit(1)).alias("nl")
     )
@@ -2193,7 +2190,7 @@ def texttiling_chunk_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: x != "",
         ).alias("ws"),
     )
-    words = op_cache.track(words.cache())
+    words = op_cache.reuse(words)
     pos = words.select(
         "doc_id", F.posexplode("ws").alias("p0", "w")
     ).select("doc_id", (F.col("p0") + 1).alias("p"), "w")
@@ -2221,7 +2218,7 @@ def texttiling_chunk_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    sides = op_cache.track(sides.cache())
+    sides = op_cache.reuse(sides)
     l = sides.filter(F.col("side") == "l").select(
         F.col("doc_id").alias("dl"),
         F.col("g").alias("gl"),
@@ -2357,7 +2354,7 @@ def self_bleu_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: x != "",
         ).alias("ws"),
     )
-    words = op_cache.track(words.cache())
+    words = op_cache.reuse(words)
     uni = words.select("doc_id", F.explode("ws").alias("g"))
     bi = words.select(
         "doc_id",

@@ -997,7 +997,7 @@ def logrank_survival_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("t"),
         )
     )
-    subjects = op_cache.track(subjects.cache())
+    subjects = op_cache.reuse(subjects)
     etimes = subjects.filter(F.col("event") == 1).select("t").distinct()
     at_risk = (
         etimes.select(F.col("t").alias("et"))
@@ -1104,7 +1104,7 @@ def friedman_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("block"),
         F.col("o_orderpriority").alias("trt"),
     ).agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("v"))
-    cell = op_cache.track(cell.cache())
+    cell = op_cache.reuse(cell)
     blocks = (
         cell.groupBy("block")
         .agg(F.count(F.lit(1)).alias("ntrt"))

@@ -369,6 +369,23 @@ class TestSinks:
         assert result.error.startswith("ValueError: ")
         assert "unknown compression" in result.error
 
+    def test_analysis_error_building_the_export_fails_it(self, spark, tmp_path):
+        from hbase_to_mongo_export_spark.plans.metrics import MetricsRegistry
+        from hbase_to_mongo_export_spark.plans.status import LocalStatusStore
+
+        store = LocalStatusStore(str(tmp_path / "status.jsonl"))
+        metrics = MetricsRegistry("export")
+        df = spark.createDataFrame([(1, "x")], "a int, b string")
+        result = run_export(
+            spark, df, cfg(tmp_path), correlation_id="bad-shape",
+            status_store=store, metrics=metrics,
+        )
+        assert result.status == "Export_Failed"
+        assert "UNRESOLVED_COLUMN" in result.error
+        lines = [json.loads(l) for l in open(tmp_path / "status.jsonl")]
+        assert lines[-1]["status"] == "Export_Failed"
+        assert metrics.snapshot()["export_failures"] == 1
+
 
 class TestConnectors:
     def test_unavailable_connectors_raise_clearly(self, spark, source):

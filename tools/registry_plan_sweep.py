@@ -12,14 +12,10 @@ the scale-relevant smells from the optimization guide:
 
 Prints one JSON line per flagged query plus a summary. Mostly plan-only:
 the RETURNED DataFrame is never executed, but queries that materialize
-intermediates during construction (``_mat``/``localCheckpoint``, the
-per-round checkpoints of iterative operators, lakehouse builders
-committing table versions) do run Spark jobs at build time, and their
-checkpointed partitions are not covered by ``op_cache.release_all()`` —
-they free asynchronously when the driver-side DataFrames are
-garbage-collected. At the sweep's sf0.001 default that residency is
-trivial; re-running at a larger sf, add a periodic
-``spark.catalog.clearCache()`` / gc.collect() between queries.
+intermediates during construction (``op_cache.checkpoint``, the per-round
+checkpoints of iterative operators, lakehouse builders committing table
+versions) do run Spark jobs at build time; ``op_cache.release_all()``
+after each query frees what they materialized.
 
 Usage: python tools/registry_plan_sweep.py [sf_dir] [out.json]
 """
