@@ -35,9 +35,10 @@ def _register_executor_modules() -> None:
         from .functions import crypto as _crypto
         from .functions import normalize as _normalize
         from .operators import multimodal as _multimodal
+        from .operators import similarity as _similarity
         from .streaming import stateful as _stateful
 
-        for _m in (_crypto, _normalize, _multimodal, _stateful):
+        for _m in (_crypto, _normalize, _multimodal, _similarity, _stateful):
             _cp.register_pickle_by_value(_m)
     except Exception:  # pragma: no cover - never block import on this
         pass

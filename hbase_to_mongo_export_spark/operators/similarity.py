@@ -14,13 +14,18 @@
 - ``ivf_topk``         — IVF-style: k-means-ish centroids picked
   deterministically (hash-sampled), vectors assigned to nearest centroid;
   queries probe the ``nprobe`` nearest centroids. Same equi-join shape.
+
+- ``pq_codes`` / ``ivfpq_search`` — PQ codes and IVF+PQ search over
+  quantized vectors: one exact int64 numpy kernel on Arrow batches.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -615,4 +620,189 @@ def kmeans_lloyd(
             F.col("cv").alias("centroid"),
         )
         .orderBy("cluster_id")
+    )
+
+
+class _PQIndex(NamedTuple):
+    """The small sets the PQ kernel closes over, ids ascending so every
+    ``argmin`` and stable sort breaks a distance tie to the lowest id."""
+
+    code_ids: np.ndarray  # (k,)
+    codebook: np.ndarray  # (k, dim)
+    list_ids: np.ndarray  # (c,) coarse centroid ids
+    coarse: np.ndarray  # (c, dim)
+    probe_ids: np.ndarray  # (p,)
+    probes: np.ndarray  # (p, dim)
+    probe_lists: np.ndarray | None  # (p, nprobe); None: no IVF stage
+    lut: np.ndarray  # (subs, p, k) probe-to-codeword squared L2
+
+
+PQ_SUB_DIM = 8  # PQ subspace s holds dimensions [8s, 8s + 8)
+
+
+def _block_sq_dists(x: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Squared L2 from every row of ``x`` to every row of ``c`` in each
+    PQ subspace: an int64 (subs, len(x), len(c)) array. Integer sums are
+    exact in any order."""
+    w = PQ_SUB_DIM
+    return np.stack(
+        [
+            np.square(x[:, None, s : s + w] - c[None, :, s : s + w]).sum(axis=2)
+            for s in range(0, x.shape[1], w)
+        ]
+    )
+
+
+def _pq_kernel(x: np.ndarray, index: _PQIndex):
+    """The shared integer vector kernel. For each row of the int64
+    matrix ``x``: the nearest coarse list (None without an IVF stage),
+    the PQ code (codeword id) of every subspace and its squared error,
+    and per probe the ADC sum (the probe's lookup-table distances to the
+    row's codewords) and the exact squared L2. All int64 and every tie
+    to the lowest id, so the values are the integer SQL plan's."""
+    code_d = _block_sq_dists(x, index.codebook)
+    code = code_d.argmin(axis=2)
+    err = np.take_along_axis(code_d, code[:, :, None], axis=2)[:, :, 0]
+    lists = None
+    if index.probe_lists is not None:
+        near = _block_sq_dists(x, index.coarse).sum(axis=0).argmin(axis=1)
+        lists = index.list_ids[near]
+    adist = np.take_along_axis(index.lut, code[:, None, :], axis=2).sum(axis=0)
+    edist = _block_sq_dists(x, index.probes).sum(axis=0)
+    return lists, index.code_ids[code].T, err.T, adist.T, edist
+
+
+def _pq_map(qz, emit, schema, n_codes, n_lists=0, n_probes=0, nprobe=0):
+    """Map ``emit(ids, x, index)`` over the Arrow batches of ``qz``'s
+    (vec_id, qv) vectors. The codebook, coarse centroids and probes are
+    the vectors with ``vec_id`` below ``n_codes``, ``n_lists`` and
+    ``n_probes`` that exist, collected in one job (so a DuckDB oracle
+    replays each with ``vec_id < n``). Null and empty vectors are
+    skipped, as ``posexplode`` skips them; all others need one dimension.
+
+    Nothing repartitions the scan: the kernel runs in as many tasks as
+    the scan gives, with no exchange before it. Each task running at once
+    holds a Python worker (numpy, pyarrow, a batch of vectors), so more
+    tasks would raise peak memory for little gain on a cheap kernel."""
+    vecs = qz.select("vec_id", "qv").filter(F.size("qv") > 0)
+    n = max(n_codes, n_lists, n_probes)
+    rows = sorted(vecs.filter(F.col("vec_id") < n).collect())
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    if not (ids < n_codes).any() or (n_lists and not (ids < n_lists).any()):
+        msg = f"no codewords (vec_id < {n_codes}) or coarse lists (< {n_lists})"
+        raise ValueError(msg)
+    mat = np.array([r[1] for r in rows], dtype=np.int64)
+    sets = [(ids[ids < m], mat[ids < m]) for m in (n_codes, n_lists, n_probes)]
+    (code_ids, codebook), (list_ids, coarse), (probe_ids, probes) = sets
+    probe_lists = None
+    if n_lists:
+        near = np.argsort(_block_sq_dists(probes, coarse).sum(axis=0), kind="stable")
+        probe_lists = list_ids[near[:, :nprobe]]
+    lut = _block_sq_dists(probes, codebook)
+    index = _PQIndex(*sets[0], *sets[1], *sets[2], probe_lists, lut)
+    dim = mat.shape[1]
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            ids, qv = batch.column(0).to_numpy(), batch.column(1)
+            if (np.diff(qv.offsets.to_numpy()) != dim).any():
+                raise ValueError(f"every vector needs dimension {dim}")
+            x = qv.flatten().to_numpy().astype(np.int64).reshape(-1, dim)
+            yield pa.RecordBatch.from_pydict(emit(ids, x, index))
+
+    return vecs.mapInArrow(run, schema)
+
+
+def pq_codes(qz: DataFrame, n_codes: int = 16) -> DataFrame:
+    """Product-quantization codes: each PQ subspace of each vector
+    snapped to its nearest codeword, from the vectors with ``vec_id <
+    n_codes``. One row per vector and subspace: (vec_id, sub, cid, dist),
+    ``dist`` being the squared quantization error."""
+
+    def emit(ids, x, index):
+        _, code, err, _, _ = _pq_kernel(x, index)
+        subs = np.arange(code.shape[1], dtype=np.int32)
+        return dict(
+            vec_id=np.repeat(ids, len(subs)),
+            sub=np.tile(subs, len(ids)),
+            cid=code.ravel(),
+            dist=err.ravel(),
+        )
+
+    return _pq_map(qz, emit, "vec_id long, sub int, cid long, dist long", n_codes)
+
+
+def ivfpq_candidates(
+    qz: DataFrame,
+    n_probes: int,
+    n_codes: int = 16,
+    n_lists: int = 0,
+    nprobe: int = 1,
+    *,
+    keep: int,
+) -> DataFrame:
+    """Scored PQ search candidates: (pid, xid, adist, edist) for each
+    probe ``pid`` (``vec_id < n_probes``) and candidate ``xid != pid``;
+    ``adist`` is the ADC distance through the ``pq_codes`` codes,
+    ``edist`` the exact squared L2. With ``n_lists`` coarse centroids, a
+    vector is a candidate of the probes whose ``nprobe`` nearest lists
+    hold its nearest list; with none, of every probe.
+
+    ``keep`` cuts top-k inside each Arrow batch: per probe, a batch emits
+    only its first ``keep`` candidates by (adist, xid) and by (edist,
+    xid). The global first ``keep`` in either order are a subset of the
+    union of the batches' first ``keep``, so a ``row_number`` window over
+    this output ranks them exactly as over all candidates."""
+
+    def emit(ids, x, index):
+        lists, _, _, adist, edist = _pq_kernel(x, index)
+        picks = [np.empty((2, 0), dtype=np.intp)]
+        for j, pid in enumerate(index.probe_ids):
+            cand = ids != pid
+            if lists is not None:
+                cand &= np.isin(lists, index.probe_lists[j])
+            rows = np.flatnonzero(cand)
+            firsts = [
+                rows[np.lexsort((ids[rows], d[rows, j]))[:keep]] for d in (adist, edist)
+            ]
+            rows = np.union1d(*firsts)
+            picks.append(np.stack([rows, np.full(len(rows), j)]))
+        r, j = np.concatenate(picks, axis=1)
+        pid = index.probe_ids[j]
+        return dict(pid=pid, xid=ids[r], adist=adist[r, j], edist=edist[r, j])
+
+    schema = "pid long, xid long, adist long, edist long"
+    return _pq_map(qz, emit, schema, n_codes, n_lists, n_probes, nprobe)
+
+
+def ivfpq_search(
+    qz: DataFrame,
+    n_probes: int = 3,
+    n_codes: int = 16,
+    n_lists: int = 8,
+    nprobe: int = 2,
+    k_adc: int = 20,
+    k: int = 10,
+) -> DataFrame:
+    """IVF+PQ search (the FAISS shape): each probe's candidates from its
+    ``nprobe`` nearest lists, ranked by ADC to the first ``k_adc`` and
+    re-ranked by exact squared L2 to the first ``k``, ties to the lower
+    id: (probe_id, neighbor_id, rank, l2_sq). One small exchange feeds
+    both windows: at most 2 x k_adc rows per Arrow batch and probe."""
+    by_adc = Window.partitionBy("pid").orderBy("adist", "xid")
+    by_l2 = Window.partitionBy("pid").orderBy("edist", "xid")
+    return (
+        ivfpq_candidates(qz, n_probes, n_codes, n_lists, nprobe, keep=k_adc)
+        .withColumn("adc_rank", F.row_number().over(by_adc))
+        .filter(F.col("adc_rank") <= k_adc)
+        .withColumn("rank", F.row_number().over(by_l2))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("pid").alias("probe_id"),
+            F.col("xid").alias("neighbor_id"),
+            F.col("rank").cast("int"),
+            F.col("edist").alias("l2_sq"),
+        )
     )

@@ -124,7 +124,6 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on a gate-sized graph
     with _scoped_shuffle_partitions(spark, 32):
         comp = dedup_mod.connected_components(pairs, "id_a", "id_b")
-        comp = op_cache.checkpoint(comp)
     return (
         comp.groupBy("component")
         .agg(F.count(F.lit(1)).alias("size"))

@@ -491,37 +491,14 @@ def embedding_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic codebook entries (the sub-vectors of ids 0..15) in exact
     integer L2. Reports codebook utilization + mean quantization error per
     subspace — the calibration readout you tune M/K with before committing
-    a 100 TB ANN index to PQ codes. The distance computation is one
-    (sub,dpos)-keyed join + aggregate: distance-table shaped, no per-row
-    Python, linear in vectors x codebook."""
+    a 100 TB ANN index to PQ codes. Plan: the shared integer kernel
+    (``sim_mod.pq_codes``, one mapInArrow pass over the scan against the
+    driver-collected codebook) feeds one per-subspace aggregate."""
     emb = _t(spark, sf_dir, "embeddings")
     q = sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding")
-    dims = q.select(
-        "vec_id", F.posexplode("qv").alias("pos0", "val")
-    ).select(
-        "vec_id",
-        (F.col("pos0") / 8).cast("int").alias("sub"),
-        (F.col("pos0") % 8).alias("dpos"),
-        "val",
-    )
-    cents = dims.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cid"), "sub", "dpos", F.col("val").alias("cval")
-    )
-    dists = (
-        dims.join(F.broadcast(cents), ["sub", "dpos"])
-        .groupBy("vec_id", "sub", "cid")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("cval")) * (F.col("val") - F.col("cval"))
-            ).alias("dist")
-        )
-    )
-    wmin = Window.partitionBy("vec_id", "sub").orderBy("dist", "cid")
-    assign = (
-        dists.withColumn("rn", F.row_number().over(wmin)).filter(F.col("rn") == 1)
-    )
     return (
-        assign.groupBy("sub")
+        sim_mod.pq_codes(q, n_codes=16)
+        .groupBy("sub")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
             F.countDistinct("cid").cast("int").alias("n_codes_used"),
@@ -529,12 +506,7 @@ def embedding_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "avg_sq_err"
             ),
         )
-        .select(
-            F.col("sub").cast("int").alias("subspace"),
-            "n_vectors",
-            "n_codes_used",
-            "avg_sq_err",
-        )
+        .withColumnRenamed("sub", "subspace")
         .orderBy("subspace")
     )
 
@@ -913,88 +885,26 @@ def embedding_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     against exact quantized L2. Everything is integer arithmetic (exact
     codes, exact ADC sums, deterministic tiebreaks), so the whole
     approximate-search pipeline carries a full value oracle. Plan: the
-    corpus-scale work is one codes table and one broadcastable
-    (probe x sub x centroid) lookup — the scan side never materializes
-    probe x corpus x dims."""
+    shared integer kernel (``sim_mod.ivfpq_candidates``, one mapInArrow
+    pass) scores every vector against the 3 driver-collected probes and
+    keeps each Arrow batch's first 10 per probe by ADC and by exact L2;
+    one small exchange feeds the two rank windows."""
     emb = _t(spark, sf_dir, "embeddings")
     q = sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding")
-    dims = q.select(
-        "vec_id", F.posexplode("qv").alias("pos0", "val")
-    ).select(
-        "vec_id",
-        (F.col("pos0") / 8).cast("int").alias("sub"),
-        (F.col("pos0") % 8).alias("dpos"),
-        "val",
-    )
-    dims = op_cache.reuse(dims)
-    cents = dims.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cid"), "sub", "dpos", F.col("val").alias("cval")
-    )
-    code_d = (
-        dims.join(F.broadcast(cents), ["sub", "dpos"])
-        .groupBy("vec_id", "sub", "cid")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("cval")) * (F.col("val") - F.col("cval"))
-            ).alias("dist")
-        )
-    )
-    code_d = op_cache.reuse(code_d)
-    wcode = Window.partitionBy("vec_id", "sub").orderBy("dist", "cid")
-    codes = (
-        code_d.withColumn("rn", F.row_number().over(wcode))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "sub", "cid")
-    )
-    probe_lut = code_d.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("pid"), "sub", "cid", "dist"
-    )
-    adc = (
-        codes.join(
-            F.broadcast(probe_lut),
-            (codes.sub == probe_lut.sub)
-            & (codes.cid == probe_lut.cid)
-            & (codes.vec_id != probe_lut.pid),
-        )
-        .groupBy("pid", F.col("vec_id").alias("xid"))
-        .agg(F.sum("dist").alias("adist"))
-    )
-    wtop = Window.partitionBy("pid").orderBy("adist", "xid")
-    adc_top = (
-        adc.withColumn("rn", F.row_number().over(wtop))
-        .filter(F.col("rn") <= 10)
-        .select("pid", "xid")
-    )
-    pd_ = dims.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("pid"), "sub", "dpos", F.col("val").alias("pval")
-    )
-    exact = (
-        dims.join(F.broadcast(pd_), ["sub", "dpos"])
-        .filter(F.col("vec_id") != F.col("pid"))
-        .groupBy("pid", F.col("vec_id").alias("xid"))
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("pval")) * (F.col("val") - F.col("pval"))
-            ).alias("edist")
-        )
-    )
-    wex = Window.partitionBy("pid").orderBy("edist", "xid")
-    exact_top = (
-        exact.withColumn("rn", F.row_number().over(wex))
-        .filter(F.col("rn") <= 10)
-        .select(F.col("pid").alias("epid"), F.col("xid").alias("exid"))
-    )
+    by_adc = Window.partitionBy("pid").orderBy("adist", "xid")
+    by_l2 = Window.partitionBy("pid").orderBy("edist", "xid")
     return (
-        adc_top.join(
-            exact_top,
-            (F.col("pid") == F.col("epid")) & (F.col("xid") == F.col("exid")),
-            "left",
-        )
+        sim_mod.ivfpq_candidates(q, n_probes=3, n_codes=16, keep=10)
+        .withColumn("adc_rank", F.row_number().over(by_adc))
+        .withColumn("l2_rank", F.row_number().over(by_l2))
+        .filter(F.col("adc_rank") <= 10)
         .groupBy(F.col("pid").alias("probe_id"))
         .agg(
             F.lit(10).cast("int").alias("k"),
-            F.count("exid").cast("bigint").alias("n_hits"),
-            F.round(F.count("exid").cast("double") / 10, 6).alias("recall_at_10"),
+            F.count_if(F.col("l2_rank") <= 10).alias("n_hits"),
+        )
+        .withColumn(
+            "recall_at_10", F.round(F.col("n_hits").cast("double") / 10, 6)
         )
         .orderBy("probe_id")
     )
@@ -1265,115 +1175,15 @@ def similarity_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the final top-10 — candidate pruning, compressed scoring, and
     exact re-rank verified end-to-end in integer arithmetic.
 
-    Plan at scale: the coarse assignment is a broadcast of 8 centroid
-    rows against the corpus (one pass), candidate generation is an
-    equi-join on list_id (no all-pairs stage), the ADC join touches
-    only candidates x 8 sub-codes with a broadcastable probe LUT, and
-    the exact re-rank touches 20 rows per probe."""
+    Plan at scale: one mapInArrow pass of the shared integer kernel
+    (``sim_mod.ivfpq_search``) over the scan gives each vector its list,
+    codes, ADC sum and exact L2 against the driver-collected centroids
+    and probes, and keeps each Arrow batch's first 20 per probe; one
+    small exchange feeds the two rank windows. Exact, because the global
+    top-20 is a subset of the union of the batches' top-20."""
     emb = _t(spark, sf_dir, "embeddings")
     qz = sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding")
-    dims = qz.select(
-        "vec_id", F.posexplode("qv").alias("pos0", "val")
-    ).select(
-        "vec_id",
-        (F.col("pos0") / 8).cast("int").alias("sub"),
-        (F.col("pos0") % 8).alias("dpos"),
-        "val",
-    )
-    dims = op_cache.reuse(dims)
-    coarse = dims.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("ccid"), "sub", "dpos", F.col("val").alias("ccval")
-    )
-    cd = (
-        dims.join(F.broadcast(coarse), ["sub", "dpos"])
-        .groupBy("vec_id", "ccid")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("ccval")) * (F.col("val") - F.col("ccval"))
-            ).alias("dist")
-        )
-    )
-    cd = op_cache.reuse(cd)
-    w_assign = Window.partitionBy("vec_id").orderBy("dist", "ccid")
-    assign = (
-        cd.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("ccid").alias("list_id"))
-    )
-    w_probe = Window.partitionBy("pid").orderBy("dist", "ccid")
-    probe_lists = (
-        cd.filter(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("pid"), "ccid", "dist")
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= 2)
-        .select("pid", F.col("ccid").alias("list_id"))
-    )
-    cand = (
-        assign.join(F.broadcast(probe_lists), "list_id")
-        .filter(F.col("vec_id") != F.col("pid"))
-        .select("pid", F.col("vec_id").alias("xid"))
-    )
-    subcents = dims.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cid"), "sub", "dpos", F.col("val").alias("scval")
-    )
-    code_d = (
-        dims.join(F.broadcast(subcents), ["sub", "dpos"])
-        .groupBy("vec_id", "sub", "cid")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("scval")) * (F.col("val") - F.col("scval"))
-            ).alias("dist")
-        )
-    )
-    code_d = op_cache.reuse(code_d)
-    w_code = Window.partitionBy("vec_id", "sub").orderBy("dist", "cid")
-    codes = (
-        code_d.withColumn("rn", F.row_number().over(w_code))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "sub", "cid")
-    )
-    probe_lut = code_d.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("pid"), "sub", "cid", F.col("dist").alias("ldist")
-    )
-    adc = (
-        cand.join(codes, cand.xid == codes.vec_id)
-        .join(F.broadcast(probe_lut), ["pid", "sub", "cid"])
-        .groupBy("pid", "xid")
-        .agg(F.sum("ldist").alias("adist"))
-    )
-    w_adc = Window.partitionBy("pid").orderBy("adist", "xid")
-    adc_top = (
-        adc.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= 20)
-        .select("pid", "xid")
-    )
-    dp = dims.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("pid"), "sub", "dpos", F.col("val").alias("pval")
-    )
-    exact = (
-        # adc_top is <= 20 rows per probe — broadcast it against the
-        # corpus-scale dims scan rather than shuffling dims
-        dims.join(F.broadcast(adc_top), dims.vec_id == adc_top.xid)
-        .join(F.broadcast(dp), ["pid", "sub", "dpos"])
-        .groupBy("pid", "xid")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("pval")) * (F.col("val") - F.col("pval"))
-            ).alias("edist")
-        )
-    )
-    w_final = Window.partitionBy("pid").orderBy("edist", "xid")
-    return (
-        exact.withColumn("rn", F.row_number().over(w_final))
-        .filter(F.col("rn") <= 10)
-        .select(
-            F.col("pid").alias("probe_id"),
-            F.col("xid").alias("neighbor_id"),
-            F.col("rn").cast("int").alias("rank"),
-            F.col("edist").cast("bigint").alias("l2_sq"),
-        )
-        .orderBy("probe_id", "rank")
-    )
+    return sim_mod.ivfpq_search(qz).orderBy("probe_id", "rank")
 
 
 @register(
@@ -1492,33 +1302,27 @@ def mann_whitney_u_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Gram-matrix accumulation (X^T X — the kernel behind
-    covariance, PCA, and linear-model normal equations at scale): each
-    vector contributes its dimension outer product map-side, partial
-    sums combine before the (i, j) shuffle, and no n x n object ever
-    exists — state is d(d+1)/2 cells regardless of row count. Computed
-    over the first 8 quantized dimensions (36 upper-triangle cells) in
-    exact integer arithmetic."""
+    covariance, PCA, and linear-model normal equations at scale): one
+    aggregate pass in which each cell is a SUM over vectors of
+    qv[i]·qv[j], combined map-side, so no n x n object and no per-
+    dimension row ever exists — state is d(d+1)/2 cells regardless of
+    row count. Computed over the first 8 quantized dimensions (36
+    upper-triangle cells) in exact integer arithmetic."""
     emb = _t(spark, sf_dir, "embeddings")
     q = sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding")
-    dims = (
-        q.select("vec_id", F.posexplode("qv").alias("i", "val"))
-        .filter(F.col("i") < 8)
-        .select("vec_id", F.col("i").cast("int").alias("i"), "val")
-    )
-    a = dims.alias("a")
-    b = dims.select(
-        F.col("vec_id").alias("bv"),
-        F.col("i").alias("j"),
-        F.col("val").alias("bval"),
-    )
-    return (
-        a.join(b, (F.col("bv") == F.col("a.vec_id")) & (F.col("j") >= F.col("a.i")))
-        .groupBy(F.col("a.i").alias("row_i"), F.col("j").alias("col_j"))
-        .agg(
-            F.sum(F.col("a.val").cast("bigint") * F.col("bval"))
-            .cast("bigint")
-            .alias("dot")
+    cells = [
+        F.struct(
+            F.lit(i).alias("row_i"),
+            F.lit(j).alias("col_j"),
+            F.sum(F.get("qv", i).cast("bigint") * F.get("qv", j)).alias("dot"),
         )
+        for i in range(8)
+        for j in range(i, 8)
+    ]
+    return (
+        q.agg(F.array(*cells).alias("cells"))
+        .select(F.inline("cells"))
+        .filter(F.col("dot").isNotNull())
         .orderBy("row_i", "col_j")
     )
 

@@ -4452,7 +4452,6 @@ def entity_resolution_canonicalize(spark: SparkSession, sf_dir: str) -> DataFram
     )
     with _scoped_shuffle_partitions(spark, 32):
         comp = dedup_mod.connected_components(pairs, "id_a", "id_b")
-        comp = op_cache.checkpoint(comp)
     clusters = comp.groupBy(F.col("component").alias("canonical_id")).agg(
         F.count(F.lit(1)).alias("n_members")
     )
@@ -4635,7 +4634,6 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with _scoped_shuffle_partitions(spark, 32):
         comp = dedup_mod.connected_components(cedge, "ia", "ib", nodes=core)
-        comp = op_cache.checkpoint(comp)
     comp = comp.select("id", F.col("component").alias("cluster_id"))
     border = (
         nbr.join(core.withColumnRenamed("id", "ia"), "ia", "left_anti")

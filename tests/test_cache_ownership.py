@@ -32,9 +32,12 @@ JOBS = {
     "graph_cc_two_phase": 18,
     "matrix_profile_weekly_motif": 15,  # checkpoints shared subplans
     "ransac_line_fit": 15,  # checkpoints shared subplans
-    "dedup_retention_manifest": 29,  # a connected_components caller
+    # connected_components callers: its label map comes back checkpointed
+    "dedup_retention_manifest": 29,
+    "dedup_cluster_components": 27,
+    "dbscan_grid_clusters": 113,
     "dedup_jaccard_prefix_filter": 15,  # spills to parquet
-    "similarity_ivfpq_search": 28,
+    "similarity_ivfpq_search": 6,  # index collect + one kernel pass
     "merge_upsert_orders": 21,
 }
 

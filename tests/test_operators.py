@@ -4,6 +4,7 @@ multimodal plumbing, and control-plane aggregation."""
 
 import datetime as dt
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -408,6 +409,133 @@ class TestIVF:
         a = sorted(map(str, sim.ivf_topk(emb, qs, k=3).collect()))
         b = sorted(map(str, sim.ivf_topk(emb, qs, k=3).collect()))
         assert a == b
+
+
+class TestIVFPQPerBatchTopK:
+    """``ivfpq_candidates`` cuts the top-k inside each Arrow batch. The
+    cut is exact: the rows are the same at 1 and at 7 input partitions
+    (one of them empty), whose 32-row batches split the table
+    differently, and equal a numpy brute force of the same definition.
+    Eight copies of probe 0 lead the first batch in descending id order,
+    so the cut binds there and must keep the lowest ids."""
+
+    CONFS = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "32",
+        # one file per partition, so the empty file is an empty partition
+        "spark.sql.files.openCostInBytes": str(128 << 20),
+    }
+    K = 5
+    # coarse lists 0-4 without the null 3, codebook 0-15 without 3, 5, 11
+    INDEX = dict(n_probes=3, n_codes=16, n_lists=5)
+
+    @staticmethod
+    def _table():
+        rng = np.random.default_rng(11)
+        vecs = rng.integers(-64, 65, size=(300, 64)) / 64  # x * 64 is exact
+        vecs[200:292] = vecs[50:142]  # same vectors under other ids: ties
+        vecs[292:] = vecs[0]  # eight copies of probe 0
+        vecs[2] = 4.0  # probe 2 is alone in its coarse list
+        vecs[4] = vecs[1]  # a coarse centroid tie: list 1 wins over list 4
+        rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+        rows[3] = (3, None)
+        rows[5] = (5, [])
+        rest = [rows[i] for i in rng.permutation(292) if i != 11]  # no id 11
+        return rows[:291:-1] + rest
+
+    def _brute_force(self, rows, nprobe):
+        """IVF+PQ rows, exact-L2 rows (probe_id, neighbor_id, rank, l2_sq)
+        and the IVF candidate count."""
+        q = {i: np.round(np.array(v) * 64).astype(np.int64) + 128 for i, v in rows if v}
+        subs = [slice(s, s + 8) for s in range(0, 64, 8)]
+
+        def d2(a, b):
+            return int(((a - b) ** 2).sum())
+
+        def nearest(x, ids, s=slice(None)):
+            return min(ids, key=lambda c: (d2(x[s], q[c][s]), c))
+
+        book = [i for i in q if i < self.INDEX["n_codes"]]
+        coarse = [i for i in q if i < self.INDEX["n_lists"]]
+        codes = {i: [nearest(v, book, s) for s in subs] for i, v in q.items()}
+        lists = {i: nearest(v, coarse) for i, v in q.items()}
+        search, exact, n_cands = [], [], 0
+        for p in sorted(i for i in q if i < self.INDEX["n_probes"]):
+
+            def adc(x):
+                return sum(d2(q[p][s], q[c][s]) for s, c in zip(subs, codes[x]))
+
+            def by_l2(xs):
+                best = sorted(xs, key=lambda x: (d2(q[p], q[x]), x))[: self.K]
+                return [(p, x, r, d2(q[p], q[x])) for r, x in enumerate(best, 1)]
+
+            scanned = sorted(coarse, key=lambda c: (d2(q[p], q[c]), c))[:nprobe]
+            cands = [x for x in q if x != p and lists[x] in scanned]
+            n_cands += len(cands)
+            search += by_l2(sorted(cands, key=lambda x: (adc(x), x))[: self.K])
+            exact += by_l2(x for x in q if x != p)
+        return sorted(search), sorted(exact), n_cands
+
+    @pytest.mark.parametrize("nprobe", [1, 2])
+    def test_same_rows_at_1_and_7_partitions_as_brute_force(
+        self, spark, tmp_path, nprobe
+    ):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql import Window
+
+        rows = self._table()
+        schema = pa.schema(
+            [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32()))]
+        )
+        chunks = np.array_split(np.arange(len(rows)), 6)
+        layouts = {1: [rows], 7: [[rows[i] for i in c] for c in chunks] + [[]]}
+        by_l2 = Window.partitionBy("pid").orderBy("edist", "xid")
+        saved = self._set_confs(spark, self.CONFS)
+        try:
+            got = {}
+            for n, parts in layouts.items():
+                (tmp_path / f"p{n}").mkdir()
+                for k, part in enumerate(parts):
+                    cols = [[r[0] for r in part], [r[1] for r in part]]
+                    table = pa.table(cols, schema=schema)
+                    pq.write_table(table, tmp_path / f"p{n}" / f"part-{k}.parquet")
+                emb = spark.read.parquet(str(tmp_path / f"p{n}"))
+                assert emb.rdd.getNumPartitions() == n
+                qz = similarity.quantize_for_kmeans(emb, "vec_id", "embedding")
+                search = similarity.ivfpq_search(
+                    qz, nprobe=nprobe, k_adc=self.K, k=self.K, **self.INDEX
+                )
+                ivf = similarity.ivfpq_candidates(
+                    qz, nprobe=nprobe, keep=self.K, **self.INDEX
+                )
+                exact = (
+                    similarity.ivfpq_candidates(qz, 3, keep=self.K)
+                    .withColumn("rank", F.row_number().over(by_l2))
+                    .filter(F.col("rank") <= self.K)
+                    .select("pid", "xid", "rank", "edist")
+                )
+                got[n] = [sorted(map(tuple, df.collect())) for df in (search, exact)]
+                got[n].append(ivf.count())
+        finally:
+            self._set_confs(spark, saved)
+        search, exact, n_cands = self._brute_force(rows, nprobe)
+        assert got[1][:2] == got[7][:2] == [search, exact]
+        # the batches did cut, and the table holds what it is for:
+        # distance ties between ids and, at nprobe=1, a probe whose list
+        # holds no candidate
+        assert max(got[1][2], got[7][2]) < n_cands
+        assert len({(p, d) for p, _, _, d in search}) < len(search)
+        assert {p for p, *_ in search} == ({0, 1} if nprobe == 1 else {0, 1, 2})
+
+    @staticmethod
+    def _set_confs(spark, confs):
+        saved = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        return saved
 
 
 class TestControlPlaneWiring:

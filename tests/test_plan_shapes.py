@@ -18,6 +18,26 @@ def plan_of(df) -> str:
     )
 
 
+def assert_one_kernel_pass(plan: str) -> None:
+    """Nothing quadratic and nothing per dimension: no cartesian product,
+    nested-loop join or ``Generate`` (explode), and exactly one
+    MapInPandas/MapInArrow node, fed by the scan with no Exchange below
+    it."""
+    for node in ("CartesianProduct", "BroadcastNestedLoopJoin", "Generate"):
+        assert node not in plan, plan
+    tree = plan.split("\n\n")[0].splitlines()
+    kernels = [
+        i for i, line in enumerate(tree) if re.search(r"MapIn(Pandas|Arrow) \(", line)
+    ]
+    assert len(kernels) == 1, plan
+    line = tree[kernels[0]]
+    depth = len(line) - len(line.lstrip(" :+-"))
+    for below in tree[kernels[0] + 1 :]:
+        if len(below) - len(below.lstrip(" :+-")) <= depth:
+            break
+        assert "Exchange" not in below, plan
+
+
 class TestPushdownAndBroadcast:
     def test_time_filters_pushed_to_scan(self, spark, sf_dir):
         df = registry.queries()["q1_pricing_summary"](spark, sf_dir)
@@ -324,10 +344,10 @@ class TestRound2PlanShapes:
         assert "CartesianProduct" not in plan
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
-    def test_pq_assign_broadcasts_codebook(self, spark, sf_dir):
-        plan = plan_of(registry.queries()["embedding_pq_assign"](spark, sf_dir))
-        assert "BroadcastHashJoin" in plan
-        assert "CartesianProduct" not in plan
+    def test_pq_assign_one_kernel_pass(self, spark, sf_dir):
+        assert_one_kernel_pass(
+            plan_of(registry.queries()["embedding_pq_assign"](spark, sf_dir))
+        )
 
     def test_triangle_count_reuses_cached_edges(self, spark, sf_dir):
         """The sparsified edge list is built once and cached; all four
@@ -463,16 +483,18 @@ class TestRound3PlanShapes:
     """Round-3 operators: the scale-relevant plan facts for the composed
     ANN path, grid-blocked geometry, postings joins, and sampling."""
 
-    def test_ivfpq_no_cartesian_broadcast_luts(self, spark, sf_dir):
-        """IVF+PQ: candidate generation is an equi-join on list_id and
-        every probe-side LUT broadcasts; nothing degenerates to a
-        cartesian product."""
-        plan = plan_of(
-            registry.queries()["similarity_ivfpq_search"](spark, sf_dir)
+    def test_ivfpq_one_kernel_pass(self, spark, sf_dir):
+        """IVF+PQ: the coarse lists, codes, ADC sums and exact distances
+        come from one Arrow-batch kernel pass over the scan; nothing
+        degenerates to a cartesian product."""
+        assert_one_kernel_pass(
+            plan_of(registry.queries()["similarity_ivfpq_search"](spark, sf_dir))
         )
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "BroadcastHashJoin" in plan
+
+    def test_pq_adc_recall_one_kernel_pass(self, spark, sf_dir):
+        assert_one_kernel_pass(
+            plan_of(registry.queries()["embedding_pq_adc_recall"](spark, sf_dir))
+        )
 
     def test_spatial_grid_join_is_equi_join(self, spark, sf_dir):
         """Grid blocking must plan as a hash equi-join on (cx, cy) — a
