@@ -15,8 +15,11 @@
   deterministically (hash-sampled), vectors assigned to nearest centroid;
   queries probe the ``nprobe`` nearest centroids. Same equi-join shape.
 
-- ``pq_codes`` / ``ivfpq_search`` — PQ codes and IVF+PQ search over
-  quantized vectors: one exact int64 numpy kernel on Arrow batches.
+- The integer vector kernels — ``pq_codes`` / ``ivfpq_search`` (PQ codes
+  and IVF+PQ search), ``kmeans_lloyd`` / ``centroid_means`` (Lloyd
+  rounds), ``farthest_point`` (greedy k-center) and ``gram`` — share one
+  shape: collect a small vector set once, run one exact int64 numpy
+  pass over the Arrow batches of the scan, finish on the driver.
 """
 
 from __future__ import annotations
@@ -536,93 +539,6 @@ def quantize_for_kmeans(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def kmeans_lloyd(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    rounds: int = 1,
-) -> DataFrame:
-    """``rounds`` synchronous Lloyd iterations in EXACT integer
-    arithmetic (see ``quantize_for_kmeans``); the first k vectors seed
-    the centroids; assignment ties break to the lowest centroid id via
-    min-struct aggregation; centroid updates are integer means. Returns
-    (cluster_id, n_members, centroid) after the final round — bit-
-    identical across engines and partitionings, so a DuckDB oracle can
-    replay every round.
-
-    Plan: per round, a broadcast cross join against k centroid rows, one
-    min-struct aggregate per vector, and one (cluster, dim) aggregate —
-    two shuffles per round at any scale. Clusters that lose all members
-    drop out identically in both engines (no refill rule)."""
-    if rounds < 1:
-        raise ValueError(f"kmeans_lloyd needs rounds >= 1, got {rounds}")
-    q = quantize_for_kmeans(df, id_col, vec_col)
-    # seed = the k vectors with ids 0..k-1 (a deterministic choice the
-    # DuckDB oracle can replay with WHERE vec_id < k). This assumes dense
-    # integer ids — verify it instead of silently clustering with fewer
-    # than k seeds on sparse/non-integer id spaces.
-    cents = q.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
-    )
-    n_seeds = cents.count()
-    if n_seeds != k:
-        raise ValueError(
-            f"kmeans_lloyd seeds centroids from ids 0..{k - 1} but found "
-            f"{n_seeds} rows with {id_col} < {k}; ids must be dense "
-            f"integers starting at 0 (re-key with row_number() first)"
-        )
-    expl = q.select(
-        "vec_id", F.posexplode("qv").alias("pos0", "val")
-    ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "val")
-
-    assign = None
-    for _ in range(rounds):
-        dists = q.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
-            "cid",
-            F.expr(
-                "aggregate(zip_with(qv, cv, (a, b) -> (a - b) * (a - b)), 0, (acc, x) -> acc + x)"
-            ).alias("dist"),
-        )
-        assign = (
-            dists.groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cid")).alias("m"))
-            .select("vec_id", F.col("m.cid").alias("cid"))
-        )
-        upd = (
-            assign.join(expl, "vec_id")
-            .groupBy("cid", "pos")
-            .agg(
-                F.expr("CAST(SUM(val) div COUNT(*) AS INT)").alias("cval"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-        cents = upd.groupBy("cid").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "cval"))),
-                lambda s: s["cval"],
-            ).alias("cv")
-        )
-    # n_members = the (cid,pos) count at any one pos — read it off the
-    # final round's update aggregate instead of re-aggregating the final
-    # assignment (which re-ran the whole last round: ReuseExchange can
-    # dedupe identical exchanges but the old sizes subtree diverged from
-    # upd's at the aggregate, so the assignment join was computed twice)
-    sizes = upd.filter(F.col("pos") == 1).select(
-        "cid", F.col("n").alias("n_members")
-    )
-    return (
-        cents.join(sizes, "cid")
-        .select(
-            F.col("cid").alias("cluster_id"),
-            "n_members",
-            F.col("cv").alias("centroid"),
-        )
-        .orderBy("cluster_id")
-    )
-
-
 class _PQIndex(NamedTuple):
     """The small sets the PQ kernel closes over, ids ascending so every
     ``argmin`` and stable sort breaks a distance tie to the lowest id."""
@@ -672,26 +588,63 @@ def _pq_kernel(x: np.ndarray, index: _PQIndex):
     return lists, index.code_ids[code].T, err.T, adist.T, edist
 
 
-def _pq_map(qz, emit, schema, n_codes, n_lists=0, n_probes=0, nprobe=0):
-    """Map ``emit(ids, x, index)`` over the Arrow batches of ``qz``'s
-    (vec_id, qv) vectors. The codebook, coarse centroids and probes are
-    the vectors with ``vec_id`` below ``n_codes``, ``n_lists`` and
-    ``n_probes`` that exist, collected in one job (so a DuckDB oracle
-    replays each with ``vec_id < n``). Null and empty vectors are
-    skipped, as ``posexplode`` skips them; all others need one dimension.
+def collect_vectors(qz: DataFrame, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """The small vector set a kernel closes over: the vectors with
+    ``vec_id < n`` that exist, collected in one job (so a DuckDB oracle
+    replays it with ``vec_id < n``), as their ids ascending and an int64
+    (len, dim) matrix. Ids ascend, so every ``argmin`` over the set breaks
+    a distance tie to the lowest id. Null and empty vectors are skipped,
+    as ``posexplode`` skips them."""
+    vecs = qz.filter(F.col("vec_id") < n).select("vec_id", "qv").collect()
+    rows = sorted(r for r in vecs if r[1])
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    return ids, np.array([r[1] for r in rows], dtype=np.int64)
+
+
+def _map_vectors(qz, fn, schema, dim=None, key=None) -> DataFrame:
+    """Map ``fn(ids, x)`` over the Arrow batches of ``qz``'s (vec_id, qv)
+    vectors, ``x`` being the batch's int64 (rows, dim) matrix; ``fn``
+    returns the output columns. A pass-through ``key`` column reaches
+    ``fn`` as a third argument. Null and empty vectors are skipped here,
+    not by a Spark filter, which would evaluate ``qv`` once more; every
+    other vector needs dimension ``dim`` (without one, the dimension of
+    its batch's first vector).
 
     Nothing repartitions the scan: the kernel runs in as many tasks as
     the scan gives, with no exchange before it. Each task running at once
     holds a Python worker (numpy, pyarrow, a batch of vectors), so more
     tasks would raise peak memory for little gain on a cheap kernel."""
-    vecs = qz.select("vec_id", "qv").filter(F.size("qv") > 0)
-    n = max(n_codes, n_lists, n_probes)
-    rows = sorted(vecs.filter(F.col("vec_id") < n).collect())
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
+
+    cols = ["vec_id", "qv"] + ([key] if key else [])
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            qv = batch.column(1)
+            sizes = qv.value_lengths().fill_null(0).to_numpy()
+            keep = sizes > 0
+            if not keep.any():
+                continue
+            want = sizes[keep][0] if dim is None else dim
+            if (sizes[keep] != want).any():
+                raise ValueError(f"every vector needs dimension {want}")
+            x = qv.flatten().to_numpy().astype(np.int64).reshape(-1, want)
+            ids, *keys = [batch.column(c).to_numpy()[keep] for c in cols if c != "qv"]
+            yield pa.RecordBatch.from_pydict(fn(ids, x, *keys))
+
+    return qz.select(*cols).mapInArrow(run, schema)
+
+
+def _pq_map(qz, emit, schema, n_codes, n_lists=0, n_probes=0, nprobe=0):
+    """Map ``emit(ids, x, index)`` over the vectors' Arrow batches. The
+    codebook, coarse centroids and probes are the vectors with ``vec_id``
+    below ``n_codes``, ``n_lists`` and ``n_probes``, collected in one
+    job."""
+    ids, mat = collect_vectors(qz, max(n_codes, n_lists, n_probes))
     if not (ids < n_codes).any() or (n_lists and not (ids < n_lists).any()):
         msg = f"no codewords (vec_id < {n_codes}) or coarse lists (< {n_lists})"
         raise ValueError(msg)
-    mat = np.array([r[1] for r in rows], dtype=np.int64)
     sets = [(ids[ids < m], mat[ids < m]) for m in (n_codes, n_lists, n_probes)]
     (code_ids, codebook), (list_ids, coarse), (probe_ids, probes) = sets
     probe_lists = None
@@ -700,19 +653,7 @@ def _pq_map(qz, emit, schema, n_codes, n_lists=0, n_probes=0, nprobe=0):
         probe_lists = list_ids[near[:, :nprobe]]
     lut = _block_sq_dists(probes, codebook)
     index = _PQIndex(*sets[0], *sets[1], *sets[2], probe_lists, lut)
-    dim = mat.shape[1]
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids, qv = batch.column(0).to_numpy(), batch.column(1)
-            if (np.diff(qv.offsets.to_numpy()) != dim).any():
-                raise ValueError(f"every vector needs dimension {dim}")
-            x = qv.flatten().to_numpy().astype(np.int64).reshape(-1, dim)
-            yield pa.RecordBatch.from_pydict(emit(ids, x, index))
-
-    return vecs.mapInArrow(run, schema)
+    return _map_vectors(qz, lambda ids, x: emit(ids, x, index), schema, mat.shape[1])
 
 
 def pq_codes(qz: DataFrame, n_codes: int = 16) -> DataFrame:
@@ -806,3 +747,153 @@ def ivfpq_search(
             F.col("edist").alias("l2_sq"),
         )
     )
+
+
+def centroid_means(qz: DataFrame, cids, cents, key: str | None = None):
+    """One Lloyd assignment and update: each vector goes to its nearest
+    centroid (squared L2; ``cids`` ascend, so ties go to the lowest id),
+    each Arrow batch emits per cluster its member count and int64
+    coordinate sums, one row per cluster and dimension, and one
+    ``groupBy`` sums the batches. With a pass-through ``key`` column the
+    clusters are split by its value as well. Returns ``(groups, sizes,
+    means)`` for every cluster that kept a member, in group order —
+    ``groups`` are cids, or (key, cid) rows with a ``key``; ``means`` are
+    the integer means, which floor division gives exactly as SQL ``div``
+    does on the non-negative quantized sums. A cluster that lost every
+    member is absent: nothing refills it."""
+    by = ([key] if key else []) + ["cid"]
+    dim = cents.shape[1]
+
+    def emit(ids, x, *keys):
+        near = _block_sq_dists(x, cents).sum(axis=0).argmin(axis=1)
+        groups = np.stack([*keys, cids[near]], axis=1)
+        uniq, inv = np.unique(groups, axis=0, return_inverse=True)
+        sums = np.zeros((len(uniq), dim), dtype=np.int64)
+        np.add.at(sums, inv.ravel(), x)
+        out = dict(zip(by, np.repeat(uniq, dim, axis=0).T))
+        out["pos"] = np.tile(np.arange(dim, dtype=np.int32), len(uniq))
+        out["s"] = sums.ravel()
+        out["n"] = np.repeat(np.bincount(inv.ravel()), dim)
+        return out
+
+    schema = ", ".join(f"{c} long" for c in by) + ", pos int, s long, n long"
+    sums = _map_vectors(qz, emit, schema, dim, key)
+    rows = sorted(sums.groupBy(*by, "pos").agg(F.sum("s"), F.sum("n")).collect())
+    a = np.array(rows, dtype=np.int64).reshape(-1, dim, len(by) + 3)
+    groups = a[:, 0, : len(by)] if key else a[:, 0, 0]
+    sizes = a[:, 0, -1]
+    return groups, sizes, a[:, :, -2] // sizes[:, None]
+
+
+def kmeans_lloyd(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 8,
+    rounds: int = 1,
+) -> DataFrame:
+    """``rounds`` synchronous Lloyd iterations in EXACT integer
+    arithmetic (see ``quantize_for_kmeans``); the first k vectors seed
+    the centroids; assignment ties break to the lowest centroid id;
+    centroid updates are integer means. Returns (cluster_id, n_members,
+    centroid) after the final round — bit-identical across engines and
+    partitionings, so a DuckDB oracle can replay every round.
+
+    Plan: the seeds are collected once (``collect_vectors``); each round
+    is one Arrow-batch kernel pass over the scan and one small (cluster,
+    dim) sum (``centroid_means``), and the driver takes the integer means
+    — no cross join and no row per dimension. Clusters that lose all
+    members drop out identically in both engines (no refill rule)."""
+    if rounds < 1:
+        raise ValueError(f"kmeans_lloyd needs rounds >= 1, got {rounds}")
+    # every pass reads the quantized vectors: cache them once rather than
+    # re-run the quantizing transform (an interpreted lambda) per round
+    q = _cache.reuse(quantize_for_kmeans(df, id_col, vec_col))
+    # seed = the k vectors with ids 0..k-1 (a deterministic choice the
+    # DuckDB oracle can replay with WHERE vec_id < k). This assumes dense
+    # integer ids — verify it instead of silently clustering with fewer
+    # than k seeds on sparse/non-integer id spaces.
+    try:
+        cids, cents = collect_vectors(q, k)
+        if len(cids) != k:
+            raise ValueError(
+                f"kmeans_lloyd seeds centroids from ids 0..{k - 1} but found "
+                f"{len(cids)} vectors with {id_col} < {k}; ids must be dense "
+                f"integers starting at 0 (re-key with row_number() first)"
+            )
+        for _ in range(rounds):
+            cids, sizes, cents = centroid_means(q, cids, cents)
+    finally:
+        _cache.release(q)
+    return df.sparkSession.createDataFrame(
+        list(zip(cids.tolist(), sizes.tolist(), cents.tolist())),
+        "cluster_id bigint, n_members bigint not null, centroid array<int> not null",
+    )
+
+
+def farthest_point(qz: DataFrame, ids, centers):
+    """Greedy k-center's step: among the vectors that are not ``centers``
+    (by their ``ids``), the one farthest (squared L2) from its nearest
+    center, ties to the lowest id — ``(vec_id, dist, vector)``, or None
+    when every vector is a center. Each Arrow batch emits its own
+    farthest vector, and one ordered take picks the winner."""
+    ids, centers = np.asarray(ids), np.asarray(centers, dtype=np.int64)
+
+    def emit(vid, x):
+        import pyarrow as pa
+
+        dist = _block_sq_dists(x, centers).sum(axis=0).min(axis=1)
+        rows = np.flatnonzero(~np.isin(vid, ids))
+        best = rows[np.lexsort((vid[rows], -dist[rows]))[:1]]
+        qv = pa.array(x[best].tolist(), pa.list_(pa.int64()))
+        return dict(vec_id=vid[best], dist=dist[best], qv=qv)
+
+    schema = "vec_id long, dist long, qv array<long>"
+    far = _map_vectors(qz, emit, schema, centers.shape[1])
+    top = far.orderBy(F.desc("dist"), "vec_id").limit(1).collect()
+    return tuple(top[0]) if top else None
+
+
+def kcenter_greedy(qz: DataFrame, k: int) -> tuple[list[int], int, int]:
+    """Greedy k-center (Gonzalez): the first center is the lowest
+    ``vec_id``, each next one the ``farthest_point`` from the centers so
+    far. Returns the k center ids in pick order, the coverage radius (the
+    squared distance from the farthest vector to its nearest center,
+    found by one more pass) and the row count of ``qz``, which comes from
+    the same aggregate as the first center. ``qz`` is cached for the
+    k + 1 passes and released after them."""
+    qz = _cache.reuse(qz)
+    try:
+        first, vec, n = qz.agg(
+            F.min("vec_id"), F.min_by("qv", "vec_id"), F.count(F.lit(1))
+        ).collect()[0]
+        if not vec:
+            raise ValueError(f"the first k-center, vec_id {first}, has no vector")
+        ids, vecs = [first], [vec]
+        for _ in range(k - 1):
+            far = farthest_point(qz, ids, vecs)
+            if far is None:
+                raise ValueError(f"k-center needs {k} vectors")
+            ids.append(far[0])
+            vecs.append(far[2])
+        far = farthest_point(qz, ids, vecs)
+    finally:
+        _cache.release(qz)
+    return ids, far[1] if far else 0, n
+
+
+def gram(qz: DataFrame, shift: int) -> np.ndarray:
+    """The int64 Gram matrix of the shifted vectors, sum of (x - shift)ᵀ
+    (x - shift): each Arrow batch emits its dim² cells, one ``groupBy``
+    sums them."""
+
+    def emit(ids, x):
+        xc = x - shift
+        i, j = np.indices((xc.shape[1],) * 2, dtype=np.int32)
+        return dict(i=i.ravel(), j=j.ravel(), g=(xc.T @ xc).ravel())
+
+    cells = _map_vectors(qz, emit, "i int, j int, g long")
+    i, j, g = np.array(cells.groupBy("i", "j").agg(F.sum("g")).collect()).T
+    out = np.zeros((i.max() + 1,) * 2, dtype=np.int64)
+    out[i, j] = g
+    return out

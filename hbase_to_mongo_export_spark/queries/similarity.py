@@ -325,8 +325,9 @@ def kmeans_lloyd_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("kmeans_lloyd_3rounds", oracle=_kmeans_oracle(rounds=3))
 def kmeans_lloyd_3rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three chained Lloyd rounds — the iterate-until-stable ML training
-    loop as a DataFrame plan, every round replayed exactly by the DuckDB
-    oracle. Two shuffles per round; centroids re-broadcast each round."""
+    loop, every round replayed exactly by the DuckDB oracle. Each round is
+    one Arrow-batch kernel pass over the scan plus one small (cluster,
+    dim) sum; the driver carries the centroids to the next round."""
     emb = _t(spark, sf_dir, "embeddings")
     return sim_mod.kmeans_lloyd(emb, k=8, rounds=3)
 
@@ -749,9 +750,9 @@ def embedding_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame
     """Dominant principal direction of the (constant-centered, quantized)
     embedding matrix by TWO power-iteration steps on the 64x64 Gram
     matrix — distributed PCA the way it actually runs at scale: the only
-    corpus-sized operation is the Gram accumulation (each vector's 64x64
-    outer product generated in-row, map-side combinable to 4096 cells;
-    no join, one exchange).
+    corpus-sized operation is the Gram accumulation (each Arrow batch's
+    int64 xᵀx from one kernel pass over the scan, operators/similarity.py::
+    gram, summed to 4096 cells by one groupBy; no join, one exchange).
     The Gram is VERTEX-sized (64x64 whatever the corpus), so the
     iteration runs on the collected cells driver-side in exact integer
     arithmetic — the same split Spark MLlib's PCA uses (RowMatrix
@@ -760,58 +761,33 @@ def embedding_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame
     over those 4096 rows and its wall time was pure job-scheduling
     overhead (profiled: ~1.8s of which the Gram was 0.07s). FLOOR-
     rescale between steps matches across engines (unlike integer div on
-    negatives); the float-sensitive tail (norm, divide, round) stays in
-    Spark SQL on a local 64-row relation so the reported doubles keep
-    engine semantics bit-for-bit."""
+    negatives); the float-sensitive tail (cast, sqrt, divide, round of
+    the exact integer norm) stays in Spark SQL on a local 64-row relation,
+    which runs no job, so the reported doubles keep engine semantics
+    bit-for-bit."""
     import math
+    from decimal import Decimal
 
     emb = _t(spark, sf_dir, "embeddings")
-    q = sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding").select(
-        "vec_id", F.expr("transform(qv, x -> x - 192)").alias("xc")
-    )
-    # Gram accumulation with NO join: each vector's 64x64 outer product
-    # is generated in-row by two chained posexplodes (narrow, codegen) and
-    # partial-aggregated map-side to 4096 cells per task before the single
-    # groupBy exchange. The previous expl-self-join on vec_id shuffled the
-    # exploded corpus TWICE and sorted both sides for a sort-merge join
-    # whose output this same aggregate then reduced — identical integer
-    # sums, cell for cell, with two exchanges and a join removed
-    # (r10 verdict ask #7; guide §2.4).
-    g_rows = (
-        q.select(F.posexplode("xc").alias("i0", "xi"), "xc")
-        .select(
-            (F.col("i0") + 1).alias("i"),
-            "xi",
-            F.posexplode("xc").alias("j0", "xj"),
-        )
-        .groupBy("i", (F.col("j0") + 1).alias("j"))
-        .agg(F.sum(F.col("xi") * F.col("xj")).alias("gij"))
-        .collect()  # 4096 integer cells — corpus-independent
-    )
-    G = {(r["i"], r["j"]): r["gij"] for r in g_rows}
-    dims = sorted({i for i, _ in G})
+    q = sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding")
+    G = sim_mod.gram(q, shift=192).tolist()  # 4096 integer cells
+    dims = range(len(G))
     # step 1: v1 = G · 1, rescaled by floor(v/16384) in DOUBLE (exact:
-    # |v1| < 2^53). step 2: v2 = G · s1 — pure int64, overflow-free.
-    v1 = {j: sum(G[(i, j)] for i in dims) for j in dims}
-    s1 = {i: math.floor(float(v1[i]) / 16384) for i in dims}
-    v2 = {j: sum(G[(i, j)] * s1[i] for i in dims) for j in dims}
+    # |v1| < 2^53). step 2: v2 = G · s1 — Python ints, overflow-free.
+    v1 = [sum(G[i][j] for i in dims) for j in dims]
+    s1 = [math.floor(float(v1[i]) / 16384) for i in dims]
+    v2 = [sum(G[i][j] * s1[i] for i in dims) for j in dims]
+    # the norm's sum of squares is exact in DECIMAL(38,0), as SQL sums it
+    ss = Decimal(sum(v * v for v in v2))
     v2_df = spark.createDataFrame(
-        [(j, v2[j]) for j in dims], "j int, v bigint"
+        [(j + 1, v, ss) for j, v in enumerate(v2)],
+        "dim int, v bigint, ss decimal(38,0)",
     )
-    nrm = v2_df.agg(
-        F.sqrt(
-            F.sum(
-                F.col("v").cast("decimal(19,0)") * F.col("v").cast("decimal(19,0)")
-            ).cast("double")
-        ).alias("nn")
-    )
-    return (
-        v2_df.crossJoin(F.broadcast(nrm))
-        .select(
-            F.col("j").cast("int").alias("dim"),
-            F.round(F.col("v").cast("double") / F.col("nn"), 6).alias("loading"),
-        )
-        .orderBy("dim")
+    return v2_df.select(
+        "dim",
+        F.round(
+            F.col("v").cast("double") / F.sqrt(F.col("ss").cast("double")), 6
+        ).alias("loading"),
     )
 
 
@@ -1025,65 +1001,33 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding model upgrade or a corpus shift hasn't silently moved the
     space under an ANN index. Integer means (floor division on
     non-negative sums is engine-identical) keep everything exact until
-    the final sqrt."""
+    the final sqrt.
+
+    Plan: the 8 seeds are collected once; one Arrow-batch kernel pass
+    (operators/similarity.py::centroid_means, the half as its pass-through
+    key) assigns every vector and sums each (half, cluster) per batch;
+    one small (half, cluster, dim) sum is collected, and the driver takes
+    the means and the drift. The sqrt and round stay in Spark SQL."""
     emb = _t(spark, sf_dir, "embeddings")
-    q = sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding")
-    cents = q.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
+    q = sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding").withColumn(
+        "half", F.col("vec_id") % 2
     )
-    dists = q.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "cid", "qv",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (a, b) -> (a - b) * (a - b)), 0, (acc, x) -> acc + x)"
-        ).alias("dist"),
+    groups, sizes, means = sim_mod.centroid_means(
+        q, *sim_mod.collect_vectors(q, 8), key="half"
     )
-    wassign = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    assign = (
-        dists.withColumn("rn", F.row_number().over(wassign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid", "qv", (F.col("vec_id") % 2).alias("half"))
-    )
-    assign = op_cache.reuse(assign)
-    dimvals = assign.select(
-        "cid", "half", F.posexplode("qv").alias("d0", "val")
-    ).select("cid", "half", (F.col("d0") + 1).alias("d"), "val")
-    means = dimvals.groupBy("cid", "half", "d").agg(
-        F.expr("sum(val) div count(1)").alias("m")
-    )
-    counts = assign.groupBy("cid", "half").agg(F.count(F.lit(1)).alias("n"))
-    a = means.filter(F.col("half") == 0).select(
-        "cid", "d", F.col("m").alias("m0")
-    )
-    b = means.filter(F.col("half") == 1).select(
-        F.col("cid").alias("cid2"), F.col("d").alias("d2x"), F.col("m").alias("m1")
-    )
-    drift = (
-        a.join(b, (a.cid == b.cid2) & (a.d == b.d2x))
-        .groupBy("cid")
-        .agg(
-            F.sum(
-                (F.col("m0") - F.col("m1")) * (F.col("m0") - F.col("m1"))
-            ).alias("dd")
-        )
-    )
-    c0 = counts.filter(F.col("half") == 0).select(
-        "cid", F.col("n").alias("n_half0")
-    )
-    c1 = counts.filter(F.col("half") == 1).select(
-        F.col("cid").alias("cidb"), F.col("n").alias("n_half1")
-    )
-    return (
-        drift.join(F.broadcast(c0), "cid")
-        .join(F.broadcast(c1), drift.cid == c1.cidb)
-        .select(
-            F.col("cid").alias("cluster_id"),
-            F.col("n_half0").cast("bigint").alias("n_half0"),
-            F.col("n_half1").cast("bigint").alias("n_half1"),
-            F.round(F.sqrt(F.col("dd").cast("double")), 6).alias(
-                "centroid_drift"
-            ),
-        )
-        .orderBy("cluster_id")
+    by = {(h, c): (int(n), m) for (h, c), n, m in zip(groups.tolist(), sizes, means)}
+    rows = [
+        (c, n0, by[1, c][0], int(((m0 - by[1, c][1]) ** 2).sum()))
+        for (h, c), (n0, m0) in by.items()
+        if h == 0 and (1, c) in by
+    ]
+    schema = "cluster_id bigint, n_half0 bigint not null, n_half1 bigint not null"
+    drift = spark.createDataFrame(rows, schema + ", dd bigint")
+    return drift.select(
+        "cluster_id",
+        "n_half0",
+        "n_half1",
+        F.round(F.sqrt(F.col("dd").cast("double")), 6).alias("centroid_drift"),
     )
 
 
@@ -1616,16 +1560,7 @@ def knn_shapley_data_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("nv"),
         F.col("label").alias("ny"),
     )
-    sqd = F.aggregate(
-        F.zip_with(
-            F.col("tv"),
-            F.col("nv"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    sqd = sim_mod.sq_l2(F.col("tv"), F.col("nv"))
     pairs = train.crossJoin(F.broadcast(test)).select(
         "tid",
         "ty",
@@ -1852,16 +1787,7 @@ def knn_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = op_cache.reuse(train)
     fracs = spark.createDataFrame([(1,), (2,), (4,)], "nb int")
-    sqd = F.aggregate(
-        F.zip_with(
-            F.col("tv"),
-            F.col("nv"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    sqd = sim_mod.sq_l2(F.col("tv"), F.col("nv"))
     pairs = (
         fracs.join(train, F.col("bucket") < F.col("nb"))
         .crossJoin(F.broadcast(test))
@@ -1961,16 +1887,7 @@ def knn_label_homophily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("vb"),
         F.col("label").alias("lb"),
     )
-    sqd = F.aggregate(
-        F.zip_with(
-            F.col("va"),
-            F.col("vb"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    sqd = sim_mod.sq_l2(F.col("va"), F.col("vb"))
     pairs = a.join(b, F.col("src") != F.col("dst")).select(
         "src", "la", "dst", "lb", sqd.alias("sqd")
     )

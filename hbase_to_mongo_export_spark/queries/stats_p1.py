@@ -1800,14 +1800,37 @@ def decision_stump_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax (ties to lowest dim, then threshold) is engine-exact. One
     shuffle on (dim,value) + a window over the (tiny) count table; the
     corpus never flows into the window."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding").join(
-        emb.select("vec_id", F.when(F.col("label") < 5, 1).otherwise(0).alias("y")),
-        "vec_id",
+    best = _best_stump(_labelled_qv(_t(spark, sf_dir, "embeddings")))
+    return best.select(
+        F.col("d").cast("int").alias("dim"),
+        F.col("val").cast("int").alias("threshold"),
+        F.col("n_correct").cast("bigint").alias("n_correct"),
+        F.round(
+            F.col("n_correct").cast("double") / F.col("n_node"), 6
+        ).alias("accuracy"),
     )
-    expl = q.select(
-        "y", F.posexplode("qv").alias("d0", "val")
-    ).select((F.col("d0") + 1).alias("d"), "val", "y")
+
+
+def _labelled_qv(emb: DataFrame) -> DataFrame:
+    """(y, qv): the quantized embeddings and the binary target label<5 the
+    stump and tree classifiers learn."""
+    y = F.when(F.col("label") < 5, 1).otherwise(0).alias("y")
+    return (
+        sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding")
+        .join(emb.select("vec_id", y), "vec_id")
+        .select("y", "qv")
+    )
+
+
+def _best_stump(qdf: DataFrame) -> DataFrame:
+    """The best single-feature split of ``qdf``'s (y, qv) rows: one row
+    (d, val, n_correct, n_node) — split ``qv[d] <= val`` (1-based d), the
+    rows it classifies correctly, and the rows it splits. One (d, val)
+    count aggregate, a cumulative window over that small table, and the
+    argmax (ties to the lowest dim, then threshold)."""
+    expl = qdf.select("y", F.posexplode("qv").alias("d0", "val")).select(
+        (F.col("d0") + 1).alias("d"), "val", "y"
+    )
     cnt = expl.groupBy("d", "val").agg(
         F.sum("y").alias("pos"),
         (F.count(F.lit(1)) - F.sum("y")).alias("neg"),
@@ -1823,7 +1846,7 @@ def decision_stump_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pos").over(wcum).alias("lp"),
         F.sum("neg").over(wcum).alias("ln"),
     )
-    tot = q.agg(
+    tot = qdf.agg(
         F.sum("y").alias("tp"),
         (F.count(F.lit(1)) - F.sum("y")).alias("tn"),
         F.count(F.lit(1)).alias("n"),
@@ -1835,18 +1858,13 @@ def decision_stump_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("lp", "ln")
             + F.greatest(F.col("tp") - F.col("lp"), F.col("tn") - F.col("ln"))
         ).alias("n_correct"),
-        "n",
+        F.col("n").alias("n_node"),
     )
     wtop = Window.orderBy(F.desc("n_correct"), "d", "val")
     return (
         scored.withColumn("rn", F.row_number().over(wtop))
         .filter(F.col("rn") == 1)
-        .select(
-            F.col("d").cast("int").alias("dim"),
-            F.col("val").cast("int").alias("threshold"),
-            F.col("n_correct").cast("bigint").alias("n_correct"),
-            F.round(F.col("n_correct").cast("double") / F.col("n"), 6).alias("accuracy"),
-        )
+        .select("d", "val", "n_correct", "n_node")
     )
 
 
@@ -2772,67 +2790,19 @@ def tree_depth2_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     — at 100 TB this is the per-level histogram pass every distributed
     tree learner (XGBoost-style) runs, with the branch filter pushed into
     the scan rather than materializing per-node copies."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = op_cache.reuse(
-        sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding")
-        .join(
-            emb.select(
-                "vec_id", F.when(F.col("label") < 5, 1).otherwise(0).alias("y")
-            ),
-            "vec_id",
-        )
-        .select("y", "qv")
-    )
-
-    def stump(qdf: DataFrame) -> DataFrame:
-        expl = qdf.select("y", F.posexplode("qv").alias("d0", "val")).select(
-            (F.col("d0") + 1).alias("d"), "val", "y"
-        )
-        cnt = expl.groupBy("d", "val").agg(
-            F.sum("y").alias("pos"),
-            (F.count(F.lit(1)) - F.sum("y")).alias("neg"),
-        )
-        wcum = (
-            Window.partitionBy("d")
-            .orderBy("val")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = cnt.select(
-            "d", "val",
-            F.sum("pos").over(wcum).alias("lp"),
-            F.sum("neg").over(wcum).alias("ln"),
-        )
-        tot = qdf.agg(
-            F.sum("y").alias("tp"),
-            (F.count(F.lit(1)) - F.sum("y")).alias("tn"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        scored = cum.join(F.broadcast(tot)).select(
-            "d", "val",
-            (
-                F.greatest("lp", "ln")
-                + F.greatest(F.col("tp") - F.col("lp"), F.col("tn") - F.col("ln"))
-            ).alias("n_correct"),
-            F.col("n").alias("n_node"),
-        )
-        wtop = Window.orderBy(F.desc("n_correct"), "d", "val")
-        return (
-            scored.withColumn("rn", F.row_number().over(wtop))
-            .filter(F.col("rn") == 1)
-            .select("d", "val", "n_correct", "n_node")
-        )
+    q = op_cache.reuse(_labelled_qv(_t(spark, sf_dir, "embeddings")))
 
     # root feeds THREE consumers (both branch filters via rootb + the
     # output union); without materialization the root-level explode +
     # aggregate over the cached corpus runs three times (guide §1.2).
     # The stump result is one row.
-    root = op_cache.checkpoint(stump(q))
+    root = op_cache.checkpoint(_best_stump(q))
     rootb = F.broadcast(
         root.select(F.col("d").alias("rd"), F.col("val").alias("rv"))
     )
     qj = q.crossJoin(rootb)
-    left = stump(qj.filter(F.expr("element_at(qv, rd) <= rv")).select("y", "qv"))
-    right = stump(qj.filter(F.expr("element_at(qv, rd) > rv")).select("y", "qv"))
+    left = _best_stump(qj.filter(F.expr("element_at(qv, rd) <= rv")).select("y", "qv"))
+    right = _best_stump(qj.filter(F.expr("element_at(qv, rd) > rv")).select("y", "qv"))
 
     def out(node: str, s: DataFrame) -> DataFrame:
         return s.select(

@@ -1135,56 +1135,15 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     point farthest from its nearest chosen center (exact quantized L2,
     deterministic tiebreaks), five rounds; report the chosen ids and
     the final coverage radius (the farthest any point sits from its
-    center). Each round is one broadcast of <= k centers against the
-    corpus plus a min-aggregate — the same per-round shape as Lloyd's,
-    oracle-unrolled round by round."""
+    center). Each round is one Arrow-batch kernel pass over the scan
+    against <= k centers closed over from the driver (operators/
+    similarity.py::kcenter_greedy) — the same per-round shape as
+    Lloyd's, oracle-unrolled round by round."""
     emb = _t(spark, sf_dir, "embeddings")
     qz = sim_mod.quantize_for_kmeans(emb, "vec_id", "embedding")
-    dims = qz.select(
-        "vec_id", F.posexplode("qv").alias("i", "val")
-    ).select("vec_id", F.col("i").cast("int").alias("i"), "val")
-    dims = op_cache.reuse(dims)
-    centers = [
-        int(qz.agg(F.min("vec_id").alias("m")).collect()[0]["m"])
-    ]
-    for _ in range(4):
-        cd = dims.filter(F.col("vec_id").isin(centers)).select(
-            F.col("vec_id").alias("cid"), "i", F.col("val").alias("cval")
-        )
-        mind = (
-            dims.filter(~F.col("vec_id").isin(centers))
-            .join(F.broadcast(cd), "i")
-            .groupBy("vec_id", "cid")
-            .agg(
-                F.sum(
-                    (F.col("val") - F.col("cval"))
-                    * (F.col("val") - F.col("cval"))
-                ).alias("dist")
-            )
-            .groupBy("vec_id")
-            .agg(F.min("dist").alias("mind"))
-        )
-        far = mind.orderBy(F.desc("mind"), "vec_id").limit(1).collect()[0]
-        centers.append(int(far["vec_id"]))
-    cd = dims.filter(F.col("vec_id").isin(centers)).select(
-        F.col("vec_id").alias("cid"), "i", F.col("val").alias("cval")
-    )
-    cover = (
-        dims.join(F.broadcast(cd), "i")
-        .groupBy("vec_id", "cid")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("cval"))
-                * (F.col("val") - F.col("cval"))
-            ).alias("dist")
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dist").alias("mind"))
-    )
-    radius = cover.agg(F.max("mind").alias("r")).collect()[0]["r"]
-    n = qz.count()
+    centers, radius, n = sim_mod.kcenter_greedy(qz, k=5)
     return spark.createDataFrame(
-        [(",".join(str(c) for c in sorted(centers)), int(radius), n)],
+        [(",".join(str(c) for c in sorted(centers)), radius, n)],
         "center_ids string, coverage_radius_sq bigint, n_points bigint",
     )
 

@@ -38,6 +38,13 @@ JOBS = {
     "dbscan_grid_clusters": 113,
     "dedup_jaccard_prefix_filter": 15,  # spills to parquet
     "similarity_ivfpq_search": 6,  # index collect + one kernel pass
+    # integer vector kernels (the cross-join and posexplode plans they
+    # replace ran 22, 18, 29 and 8): a seed collect, one or two jobs per
+    # kernel pass, and the result frame built on the driver
+    "kmeans_lloyd_3rounds": 9,
+    "embedding_centroid_drift": 5,
+    "kcenter_coreset_selection": 10,
+    "embedding_power_iteration_pc1": 4,
     "merge_upsert_orders": 21,
 }
 

@@ -411,6 +411,43 @@ class TestIVF:
         assert a == b
 
 
+BATCH_CONFS = {
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "32",
+    # one file per partition, so the empty file is an empty partition
+    "spark.sql.files.openCostInBytes": str(128 << 20),
+}
+
+
+def _partitionings(spark, tmp_path, rows):
+    """(n, DataFrame) for the (vec_id, embedding) ``rows`` written as one
+    parquet file, and as six files plus an empty one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32()))])
+    chunks = np.array_split(np.arange(len(rows)), 6)
+    layouts = {1: [rows], 7: [[rows[i] for i in c] for c in chunks] + [[]]}
+    for n, parts in layouts.items():
+        (tmp_path / f"p{n}").mkdir()
+        for k, part in enumerate(parts):
+            cols = [[r[0] for r in part], [r[1] for r in part]]
+            table = pa.table(cols, schema=schema)
+            pq.write_table(table, tmp_path / f"p{n}" / f"part-{k}.parquet")
+        emb = spark.read.parquet(str(tmp_path / f"p{n}"))
+        assert emb.rdd.getNumPartitions() == n
+        yield n, emb
+
+
+def _set_confs(spark, confs):
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+    return saved
+
+
 class TestIVFPQPerBatchTopK:
     """``ivfpq_candidates`` cuts the top-k inside each Arrow batch. The
     cut is exact: the rows are the same at 1 and at 7 input partitions
@@ -419,11 +456,6 @@ class TestIVFPQPerBatchTopK:
     Eight copies of probe 0 lead the first batch in descending id order,
     so the cut binds there and must keep the lowest ids."""
 
-    CONFS = {
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "32",
-        # one file per partition, so the empty file is an empty partition
-        "spark.sql.files.openCostInBytes": str(128 << 20),
-    }
     K = 5
     # coarse lists 0-4 without the null 3, codebook 0-15 without 3, 5, 11
     INDEX = dict(n_probes=3, n_codes=16, n_lists=5)
@@ -479,28 +511,14 @@ class TestIVFPQPerBatchTopK:
     def test_same_rows_at_1_and_7_partitions_as_brute_force(
         self, spark, tmp_path, nprobe
     ):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark.sql import Window
 
         rows = self._table()
-        schema = pa.schema(
-            [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32()))]
-        )
-        chunks = np.array_split(np.arange(len(rows)), 6)
-        layouts = {1: [rows], 7: [[rows[i] for i in c] for c in chunks] + [[]]}
         by_l2 = Window.partitionBy("pid").orderBy("edist", "xid")
-        saved = self._set_confs(spark, self.CONFS)
+        saved = _set_confs(spark, BATCH_CONFS)
         try:
             got = {}
-            for n, parts in layouts.items():
-                (tmp_path / f"p{n}").mkdir()
-                for k, part in enumerate(parts):
-                    cols = [[r[0] for r in part], [r[1] for r in part]]
-                    table = pa.table(cols, schema=schema)
-                    pq.write_table(table, tmp_path / f"p{n}" / f"part-{k}.parquet")
-                emb = spark.read.parquet(str(tmp_path / f"p{n}"))
-                assert emb.rdd.getNumPartitions() == n
+            for n, emb in _partitionings(spark, tmp_path, rows):
                 qz = similarity.quantize_for_kmeans(emb, "vec_id", "embedding")
                 search = similarity.ivfpq_search(
                     qz, nprobe=nprobe, k_adc=self.K, k=self.K, **self.INDEX
@@ -517,7 +535,7 @@ class TestIVFPQPerBatchTopK:
                 got[n] = [sorted(map(tuple, df.collect())) for df in (search, exact)]
                 got[n].append(ivf.count())
         finally:
-            self._set_confs(spark, saved)
+            _set_confs(spark, saved)
         search, exact, n_cands = self._brute_force(rows, nprobe)
         assert got[1][:2] == got[7][:2] == [search, exact]
         # the batches did cut, and the table holds what it is for:
@@ -527,15 +545,97 @@ class TestIVFPQPerBatchTopK:
         assert len({(p, d) for p, _, _, d in search}) < len(search)
         assert {p for p, *_ in search} == ({0, 1} if nprobe == 1 else {0, 1, 2})
 
+
+class TestNearestCentroidKernel:
+    """``kmeans_lloyd`` and ``kcenter_greedy`` on the Arrow-batch kernels
+    give the same rows at 1 and at 7 input partitions (one of them
+    empty, 32-row batches) and equal a numpy brute force. The table is
+    ten 2-d points, twelve copies each under shuffled ids, embedded in
+    20 dimensions, plus a null and an empty vector. Seeds 2 and 3 are
+    equidistant from point 5, and cluster 1 loses every member in round
+    2."""
+
+    POINTS = [(6, 1), (5, 1), (8, 5), (7, 4), (9, 4)]
+    POINTS += [(1, 11), (2, 5), (11, 7), (0, 7), (10, 3)]
+    DIM, AXES, COPIES, K = 20, (3, 17), 12, 4
+
+    def _table(self):
+        rng = np.random.default_rng(5)
+        n = len(self.POINTS)
+        ids = np.concatenate([np.arange(n), n + rng.permutation(n * (self.COPIES - 1))])
+        vecs = {}
+        for i, pid in zip(ids, np.tile(np.arange(n), self.COPIES)):
+            v = np.zeros(self.DIM)
+            v[list(self.AXES)] = np.array(self.POINTS[pid]) / 64  # x * 64 is exact
+            vecs[int(i)] = [float(x) for x in v]
+        rows = [(i, vecs[i]) for i in rng.permutation(sorted(vecs)).tolist()]
+        return rows + [(len(rows), None), (len(rows) + 1, [])]
+
     @staticmethod
-    def _set_confs(spark, confs):
-        saved = {k: spark.conf.get(k, None) for k in confs}
-        for k, v in confs.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-        return saved
+    def _quantized(rows):
+        return {
+            i: np.round(np.array(v) * 64).astype(np.int64) + 128 for i, v in rows if v
+        }
+
+    def _lloyd(self, q, rounds):
+        """(cluster_id, n_members, centroid) rows, the round-1 ties and the
+        clusters each round emptied."""
+        cents = {c: q[c] for c in sorted(q) if c < self.K}
+        ties, emptied = 0, []
+        for _ in range(rounds):
+            members = {}
+            for i, x in q.items():
+                d = {c: int(((x - m) ** 2).sum()) for c, m in cents.items()}
+                tied = [c for c in d if d[c] == min(d.values())]
+                ties += len(tied) > 1 and not emptied
+                members.setdefault(min(tied), []).append(x)
+            emptied.append(sorted(set(cents) - set(members)))
+            cents = {c: sum(xs) // len(xs) for c, xs in sorted(members.items())}
+            sizes = {c: len(xs) for c, xs in members.items()}
+        rows = [(c, sizes[c], m.tolist()) for c, m in cents.items()]
+        return rows, ties, emptied
+
+    @staticmethod
+    def _kcenter(q, k):
+        centers = [min(q)]
+        while True:
+            mind = {
+                i: min(int(((x - q[c]) ** 2).sum()) for c in centers)
+                for i, x in q.items()
+            }
+            far = min((-d, i) for i, d in mind.items() if i not in centers)
+            if len(centers) == k:
+                return centers, -far[0]
+            centers.append(far[1])
+
+    def test_same_rows_at_1_and_7_partitions_as_brute_force(self, spark, tmp_path):
+        rows = self._table()
+        saved = _set_confs(spark, BATCH_CONFS)
+        try:
+            got = {}
+            for n, emb in _partitionings(spark, tmp_path, rows):
+                qz = similarity.quantize_for_kmeans(emb, "vec_id", "embedding")
+                lloyd = [
+                    similarity.kmeans_lloyd(emb, k=self.K, rounds=r) for r in (1, 3)
+                ]
+                got[n] = [list(map(tuple, df.collect())) for df in lloyd]
+                # 12 centers is more than the 10 distinct points: the last
+                # picks are zero-distance ties
+                got[n] += [similarity.kcenter_greedy(qz, k) for k in (5, 12)]
+        finally:
+            _set_confs(spark, saved)
+        q = self._quantized(rows)
+        (one, ties, _), (three, _, emptied) = self._lloyd(q, 1), self._lloyd(q, 3)
+        kcenter = [(*self._kcenter(q, k), len(rows)) for k in (5, 12)]
+        assert got[1] == got[7] == [one, three, *kcenter]
+        # the table holds what it is for: seeds 2 and 3 tie for the copies
+        # of point 5, cluster 1 empties in round 2, and the centers picked
+        # past the last distinct point are its lowest-id copies
+        assert ties == self.COPIES and emptied == [[], [1], []]
+        assert [c for c, *_ in three] == [0, 2, 3]
+        (five, radius, _), (twelve, zero, _) = kcenter
+        assert radius > 0 and zero == 0 and twelve[:5] == five
+        assert len(set(twelve)) == 12 and sorted(twelve[10:]) == twelve[10:]
 
 
 class TestControlPlaneWiring:

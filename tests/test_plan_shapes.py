@@ -466,11 +466,12 @@ class TestTopKPlansUseTakeOrdered:
         assert "CartesianProduct" not in plan, plan
 
     def test_power_iteration_no_cartesian_scale_joins(self, spark, sf_dir):
-        """The Gram matrix accumulates from IN-ROW outer products (two
-        chained posexplodes, r11): no corpus-scale join of any kind may
-        appear — the only nested-loop is the 1-row norm broadcast. The
-        r10 shape self-joined the exploded corpus on vec_id (two
-        exchanges + a sort-merge join this pin forbids returning)."""
+        """The Gram matrix comes from one Arrow-batch kernel pass (each
+        batch's int64 xᵀx, summed by one groupBy) and both power steps
+        run on the driver, so the returned plan is the 64-row local tail:
+        no corpus-scale join of any kind may appear. The r10 shape
+        self-joined the exploded corpus on vec_id (two exchanges + a
+        sort-merge join this pin forbids returning)."""
         plan = plan_of(
             registry.queries()["embedding_power_iteration_pc1"](spark, sf_dir)
         )

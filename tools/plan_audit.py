@@ -66,6 +66,9 @@ def main() -> None:
         "broadcast; `pushed` = at least one predicate reached the parquet scan;",
         "`partial agg` = map-side combine before the shuffle;",
         "`read_cols` = total distinct columns scanned after pruning.",
+        "A query that checkpoints or finishes on the driver shows only its",
+        "final plan, not the work before it: that is why pagerank reads",
+        "1/0/0 and the queries on the Arrow-batch vector kernels read low.",
         "",
         "| query | exchanges | broadcast joins | sort-merge joins | pushed | partial agg | cols read |",
         "|---|---|---|---|---|---|---|",
